@@ -33,32 +33,47 @@ def infer_grid_adaptive(
     quantile: float = 0.95,
     slack: float = 2.0,
 ) -> GridSpec:
-    """Density-aware cell sizing: start from the mean-occupancy grid,
-    then shrink the cell so the POINT-WEIGHTED p95 occupancy is about
-    ``target_per_cell`` — the distributed answer to urban-density skew
-    (the reference's max-variance node splits play this role,
-    rindex.rs:636-713).  Dense cores get small cells (bounded per-query
-    candidate sets); sparse regions simply search wider, mostly-empty
-    rings, which cost almost nothing.  One extra aggregate job."""
-    spec0 = infer_grid(points, cfg, x, y)
+    """Density-aware cell sizing: the mean-occupancy grid of
+    ``infer_grid``, shrunk by ``shrink_to_occupancy``.  Two aggregate
+    jobs (extent, then occupancy)."""
+    return shrink_to_occupancy(
+        points, infer_grid(points, cfg, x, y), cfg, x, y, quantile, slack
+    )
+
+
+def shrink_to_occupancy(
+    points: DataFrame,
+    spec: GridSpec,
+    cfg: EngineConfig,
+    x: str = "x",
+    y: str = "y",
+    quantile: float = 0.95,
+    slack: float = 2.0,
+) -> GridSpec:
+    """Shrink an already-computed base grid so the POINT-WEIGHTED
+    ``quantile`` occupancy is about ``target_per_cell`` — the
+    distributed answer to urban-density skew (the reference's
+    max-variance node splits play this role, rindex.rs:636-713).  Dense
+    cores get small cells (bounded per-query candidate sets); sparse
+    regions simply search wider, mostly-empty rings, which cost almost
+    nothing.  The base spec is returned unchanged unless that occupancy
+    exceeds ``slack * target_per_cell``.  One aggregate job."""
     t = cfg.effective_target_per_cell
     occ = (
-        with_cells(points.select(F.col(x).alias("x"), F.col(y).alias("y")), spec0)
+        with_cells(points.select(F.col(x).alias("x"), F.col(y).alias("y")), spec)
         .groupBy("ix", "iy")
         .agg(F.count(F.lit(1)).alias("occ"))
     )
-    row = occ.agg(
+    p = occ.agg(
         F.expr(f"percentile(occ, {quantile}, occ)").alias("p"),
-    ).collect()[0]
-    p = row["p"] or 0.0
-    if p > slack * t:
-        shrink = (t / p) ** 0.5
+    ).collect()[0]["p"]
+    if p and p > slack * t:
         return GridSpec(
-            cell_size=max(spec0.cell_size * shrink, 1e-9),
-            x0=spec0.x0,
-            y0=spec0.y0,
+            cell_size=max(spec.cell_size * (t / p) ** 0.5, 1e-9),
+            x0=spec.x0,
+            y0=spec.y0,
         )
-    return spec0
+    return spec
 
 
 def infer_grid(points: DataFrame, cfg: EngineConfig, x: str = "x", y: str = "y") -> GridSpec:

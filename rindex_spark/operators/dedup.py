@@ -141,18 +141,33 @@ def _exploded_grams(
     src = spread_scan(df.select(*cols))
 
     if id_col:
+        import pyarrow as pa
+        from pyspark.sql.types import StructField, StructType
+
+        # the id column keeps its own type and its nulls: Arrow take()
+        # repeats the values as they are, with no pandas round trip
+        # (which turns nullable longs into NaN floats)
+        schema = StructType(
+            [
+                StructField(id_col, df.schema[id_col].dataType),
+                StructField("gram", StringType()),
+            ]
+        )
 
         def fn(batches):
             for b in batches:
-                ids = b[id_col].to_numpy()
-                lists = [_shingle_list(t, n) for t in b[text_col]]
+                lists = [_shingle_list(t, n) for t in b.column(text_col).to_pylist()]
                 lens = np.array([len(x) for x in lists], dtype=np.int64)
-                flat = [g for lst in lists for g in lst]
-                yield pd.DataFrame(
-                    {id_col: np.repeat(ids, lens), "gram": pd.Series(flat, dtype=object)}
+                rows = np.repeat(np.arange(len(lists), dtype=np.int64), lens)
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        b.column(id_col).take(pa.array(rows)),
+                        pa.array([g for lst in lists for g in lst], pa.string()),
+                    ],
+                    names=[id_col, "gram"],
                 )
 
-        return src.mapInPandas(fn, f"{id_col} long, gram string")
+        return src.mapInArrow(fn, schema)
 
     def fn(batches):
         for b in batches:
@@ -807,8 +822,11 @@ def _local_contract(batches):
     fixpoint (per node, the minimum node id reachable inside the
     partition's subgraph) is exactly the union-find's min-root —
     labels are indices into the SORTED node array, so index order is
-    id order.  Memory O(distinct nodes + edges per partition), the
-    same bound as before."""
+    id order.  The partition's whole edge list is buffered in numpy
+    before contracting, so the Python worker holds O(distinct nodes +
+    edges) of its partition — unlike a streaming union-find's O(distinct
+    nodes); how large that is depends on how the input pairs are
+    partitioned (an edge-heavy partition, E >> V, costs O(E))."""
     As, Bs = [], []
     for b in batches:
         As.append(b["a"].to_numpy(dtype=np.int64))

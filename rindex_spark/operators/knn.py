@@ -54,6 +54,7 @@ from __future__ import annotations
 import os
 import threading
 import time as _time
+import weakref
 
 import numpy as np
 import pandas as pd
@@ -90,6 +91,8 @@ _SUPER_SHIFT = 2
 # total shipped volume is bounded by the final window size instead of
 # (rounds x window).
 _KHI0_CAP = 64
+
+_OUT_SCHEMA = "qid long, id long, dist double, rank int"
 
 _STATE_SCHEMA = (
     "qid long, qx double, qy double, qix long, qiy long, "
@@ -166,9 +169,29 @@ def release_round_states(blocking: bool = False) -> None:
 # volume numbers BENCH.md quotes to machine-readable fields): rounds
 # run, candidate rows shipped into the cogroup (the replication factor
 # the annulus trim + khi0 policy control), and the brute-tail size.
-# Counting candidates costs one extra job per round, so it is opt-in —
-# bench runs ONE instrumented repeat outside the timed best-of-N.
+# Counting candidates re-runs the uncached candidate join — measured
+# at local[2] on a 5,000-point index: 18-20 jobs hooked against 14
+# unhooked for a one-round small batch, 22 against 16 for a 2,000
+# -point batch — so it is opt-in and a hooked call is slower than an
+# unhooked one.  Every call writes the dict, including calls that run
+# no ring round (k <= 0, empty points, the resident path: all zeros),
+# so a hooked call never reports its predecessor's figures.
 last_run_stats: dict = {}
+
+
+def _record_stats(rounds: int, shipped_rows: int, n_points: int, brute_tail: int) -> None:
+    if not os.environ.get("RINDEX_KNN_STATS"):
+        return
+    last_run_stats.clear()
+    last_run_stats.update(
+        {
+            "rounds": rounds,
+            "shipped_rows": int(shipped_rows),
+            "n_points": int(n_points),
+            "replication": round(shipped_rows / max(int(n_points), 1), 3),
+            "brute_tail_queries": int(brute_tail),
+        }
+    )
 
 
 def _make_round_udf(k: int, chunk: int = 256, cand_chunk: int = 4096, n_extra: int = 0):
@@ -510,6 +533,138 @@ def _make_round_udf(k: int, chunk: int = 256, cand_chunk: int = 4096, n_extra: i
     return fn
 
 
+def _carried_bounds(frontier_rows, k: int) -> np.ndarray:
+    """Per-query upper bound on the true k-th distance from the carried
+    ring state (inf = no bound).
+
+    Rows without ``cnt``/``kth`` fields (external callers) are
+    unbounded; a row whose ``cnt`` or ``kth`` is null is unbounded on
+    its own (None -> NaN under the float cast, and NaN compares false).
+    Values of the wrong type raise instead of silently disabling the
+    box prune."""
+    kth_ub = np.full(len(frontier_rows), np.inf)
+    if not frontier_rows:
+        return kth_ub
+    fields = frontier_rows[0].__fields__
+    if "cnt" not in fields or "kth" not in fields:
+        return kth_ub
+    cnt_a = np.array([r["cnt"] for r in frontier_rows], dtype=np.float64)
+    kth_a = np.array([r["kth"] for r in frontier_rows], dtype=np.float64)
+    has = (cnt_a >= k) & ~np.isnan(kth_a)
+    kth_ub[has] = kth_a[has]
+    return kth_ub
+
+
+def _knn_scan(qx, qy, qe, kth_ub, px, py, pid, pe, k, best_d, best_i, chunk=128):
+    """Merge the exact top-k of the points (px, py[, pe], pid) into each
+    query's running best lists ``best_d[r]`` / ``best_i[r]`` (in place).
+
+    The one exact kNN kernel of the scan paths: the Spark brute tail
+    calls it once per Arrow batch of a partition, the resident serving
+    path once per query with the points of its candidate cells.
+
+    qe / pe: (n, D-2) extra coordinate columns or None.  kth_ub: a per
+    -query UPPER bound on its true k-th distance (inf = none).  Queries
+    are processed in chunks of ``chunk`` in the order given, so callers
+    sort them spatially to keep each chunk's box tight.
+
+    Carried-bound box prune: any point with |px-qx| > kth_ub or
+    |py-qy| > kth_ub can never enter the query's top-k (a point at
+    dist == kth_ub CAN displace a same-dist larger id and is kept —
+    bounds are inclusive, dilated a relative 1e-9 to dominate any f64
+    rounding chain).  Points are sorted by x once, and each query chunk
+    is resolved against only the points inside the chunk's bound
+    -dilated bounding box (searchsorted x-slice + y mask) — measured 60 s
+    of scan CPU -> ~2 s for the 1342-straggler clustered 1M build,
+    output identical (pruned points are provably outside every chunk
+    member's top-k; unbounded queries keep the full scan).
+
+    Distances are sqrt(dx*dx + dy*dy [+ de*de ...]) accumulated left to
+    right in f64 — the IEEE op order of the ring kernel, the reference
+    and the SQL oracles, so every path returns bit-identical dists."""
+    n_extra = 0 if qe is None else qe.shape[1]
+    # sort by x for the box prune's searchsorted slice.  The point order
+    # never affects output: the pool predicate d <= pmax is position
+    # -independent, the tie-widened path takes ALL boundary ties, and
+    # the final (dist, id) lexsort canonicalizes order.
+    order = np.argsort(px, kind="stable")
+    px, py, pid = px[order], py[order], pid[order]
+    if n_extra:
+        pe = pe[order]
+    for s in range(0, len(qx), chunk):
+        e = min(s + chunk, len(qx))
+        M = float(kth_ub[s:e].max())
+        if np.isfinite(M):
+            # inclusive box, dilated to dominate rounding
+            Me = M * (1.0 + 1e-9) + 1e-300
+            lo = int(np.searchsorted(px, qx[s:e].min() - Me, "left"))
+            hi = int(np.searchsorted(px, qx[s:e].max() + Me, "right"))
+            ym = (py[lo:hi] >= qy[s:e].min() - Me) & (
+                py[lo:hi] <= qy[s:e].max() + Me
+            )
+            sel = np.nonzero(ym)[0] + lo
+            if not len(sel):
+                continue
+            cx_, cy_, ci_ = px[sel], py[sel], pid[sel]
+            ce_ = pe[sel] if n_extra else None
+        else:
+            cx_, cy_, ci_, ce_ = px, py, pid, pe
+        if not len(cx_):
+            continue
+        d = qx[s:e, None] - cx_[None, :]
+        np.multiply(d, d, out=d)
+        dy = qy[s:e, None] - cy_[None, :]
+        np.multiply(dy, dy, out=dy)
+        d += dy
+        del dy
+        for j in range(n_extra):
+            dj = qe[s:e, j][:, None] - ce_[:, j][None, :]
+            np.multiply(dj, dj, out=dj)
+            d += dj
+            del dj
+        np.sqrt(d, out=d)
+        kk = min(k, d.shape[1])
+        # argpartition (O(n)) + exact tie-widening instead of a full-row
+        # argsort — the row sort was ~80% of the brute tail's wall time.
+        # Distances here are exact f64, so "<= pool max" captures every
+        # k-th-boundary tie exactly.
+        part = np.argpartition(d, kk - 1, axis=1)[:, :kk]
+        pmax = np.take_along_axis(d, part, axis=1).max(axis=1)
+        wide = (d <= pmax[:, None]).sum(axis=1) > kk
+        for r in range(e - s):
+            idxs = np.nonzero(d[r] <= pmax[r])[0] if wide[r] else part[r]
+            dd = d[r][idxs]
+            ii = ci_[idxs]
+            o = np.lexsort((ii, dd))[:kk]
+            dd, ii = dd[o], ii[o]
+            if len(best_d[s + r]):
+                md = np.concatenate([best_d[s + r], dd])
+                mi = np.concatenate([best_i[s + r], ii])
+                mo = np.lexsort((mi, md))[:k]
+                best_d[s + r], best_i[s + r] = md[mo], mi[mo]
+            else:
+                best_d[s + r], best_i[s + r] = dd, ii
+
+
+def _best_columns(qid, best_d, best_i) -> dict | None:
+    """Running best lists -> (qid, id, dist, rank) column arrays, or
+    None when no query has a neighbour."""
+    lens = np.fromiter((len(b) for b in best_d), dtype=np.int64, count=len(best_d))
+    total = int(lens.sum())
+    if not total:
+        return None
+    starts = np.zeros(len(lens) + 1, dtype=np.int64)
+    np.cumsum(lens, out=starts[1:])
+    return {
+        "qid": np.repeat(np.asarray(qid, dtype=np.int64), lens),
+        "id": np.concatenate(best_i).astype(np.int64, copy=False),
+        "dist": np.concatenate(best_d),
+        "rank": (
+            np.arange(total, dtype=np.int64) - np.repeat(starts[:-1], lens) + 1
+        ).astype(np.int32),
+    }
+
+
 def _small_frontier_knn(
     points: DataFrame, frontier_rows, k: int, extra_cols: tuple = ()
 ) -> DataFrame:
@@ -521,23 +676,11 @@ def _small_frontier_knn(
 
     frontier_rows: collected rows with qid/qx/qy (driver-scale by
     contract: callers gate on a flop budget), plus optionally cnt/kth —
-    the straggler's carried state from the ring rounds.  Returns
-    (qid, id, dist, rank).
-
-    r6 round 3 — carried-bound box prune: a straggler with cnt >= k
-    already holds k true candidates whose k-th distance ``kth`` is an
-    UPPER bound on its true k-th distance (merging more points only
-    lowers it), so any point with |px-qx| > kth or |py-qy| > kth can
-    never enter its top-k (a point at dist == kth CAN displace a
-    same-dist larger id and is kept — bounds are inclusive, dilated a
-    relative 1e-9 to dominate any f64 rounding chain).  The scan sorts
-    each partition by x once and resolves each spatially-sorted query
-    chunk against only the points inside the chunk's kth-dilated
-    bounding box (searchsorted x-slice + y mask) — measured 60s of
-    scan CPU -> ~2s for the 1342-straggler clustered 1M build, output
-    identical (the pruned points are provably outside every chunk
-    member's top-k; queries with cnt < k keep the full scan)."""
-    nq_all = len(frontier_rows)
+    the straggler's carried state from the ring rounds.  A straggler
+    with cnt >= k already holds k true candidates whose k-th distance
+    ``kth`` is an UPPER bound on its true k-th distance (merging more
+    points only lowers it), which turns on ``_knn_scan``'s box prune.
+    Returns (qid, id, dist, rank)."""
     qid = np.array([r["qid"] for r in frontier_rows], dtype=np.int64)
     qx = np.array([r["qx"] for r in frontier_rows], dtype=np.float64)
     qy = np.array([r["qy"] for r in frontier_rows], dtype=np.float64)
@@ -549,15 +692,7 @@ def _small_frontier_knn(
         if n_extra
         else None
     )
-    # per-query upper bound on the true k-th distance (inf = no bound)
-    kth_ub = np.full(nq_all, np.inf)
-    try:
-        cnt_a = np.array([r["cnt"] for r in frontier_rows], dtype=np.int64)
-        kth_a = np.array([r["kth"] for r in frontier_rows], dtype=np.float64)
-        has = cnt_a >= k
-        kth_ub[has] = kth_a[has]
-    except Exception:
-        pass  # rows without carried state: unbounded scan
+    kth_ub = _carried_bounds(frontier_rows, k)
     # spatial chunking: bounded queries sorted by (x, y) so chunk boxes
     # stay tight; unbounded (inf) queries go LAST in their own chunks
     # so one of them never widens a bounded chunk to a full scan
@@ -571,89 +706,19 @@ def _small_frontier_knn(
         best_d = [np.empty(0)] * len(qid)
         best_i = [np.empty(0, dtype=np.int64)] * len(qid)
         for b in batches:
-            px = b["x"].to_numpy(dtype=np.float64)
-            py = b["y"].to_numpy(dtype=np.float64)
-            pid = b["id"].to_numpy(dtype=np.int64)
-            pe = (
-                np.column_stack(
-                    [b[c].to_numpy(dtype=np.float64) for c in extra_cols]
-                )
+            _knn_scan(
+                qx, qy, qe, kth_ub,
+                b["x"].to_numpy(dtype=np.float64),
+                b["y"].to_numpy(dtype=np.float64),
+                b["id"].to_numpy(dtype=np.int64),
+                np.column_stack([b[c].to_numpy(dtype=np.float64) for c in extra_cols])
                 if n_extra
-                else None
+                else None,
+                k, best_d, best_i,
             )
-            # sort by x for the box prune's searchsorted slice.  The
-            # point order never affects output: the pool predicate
-            # d <= pmax is position-independent, the tie-widened path
-            # takes ALL boundary ties, and the final (dist, id) lexsort
-            # canonicalizes order.
-            order = np.argsort(px, kind="stable")
-            px, py, pid = px[order], py[order], pid[order]
-            if n_extra:
-                pe = pe[order]
-            for s in range(0, len(qid), 128):
-                e = min(s + 128, len(qid))
-                M = float(kth_ub[s:e].max())
-                if np.isfinite(M):
-                    # inclusive box, dilated to dominate rounding
-                    Me = M * (1.0 + 1e-9) + 1e-300
-                    lo = int(np.searchsorted(px, qx[s:e].min() - Me, "left"))
-                    hi = int(np.searchsorted(px, qx[s:e].max() + Me, "right"))
-                    ym = (py[lo:hi] >= qy[s:e].min() - Me) & (
-                        py[lo:hi] <= qy[s:e].max() + Me
-                    )
-                    sel = np.nonzero(ym)[0] + lo
-                    if not len(sel):
-                        continue
-                    cx_, cy_, ci_ = px[sel], py[sel], pid[sel]
-                    ce_ = pe[sel] if n_extra else None
-                else:
-                    cx_, cy_, ci_, ce_ = px, py, pid, pe
-                d = qx[s:e, None] - cx_[None, :]
-                np.multiply(d, d, out=d)
-                dy = qy[s:e, None] - cy_[None, :]
-                np.multiply(dy, dy, out=dy)
-                d += dy
-                del dy
-                for j in range(n_extra):
-                    dj = qe[s:e, j][:, None] - ce_[:, j][None, :]
-                    np.multiply(dj, dj, out=dj)
-                    d += dj
-                    del dj
-                np.sqrt(d, out=d)
-                kk = min(k, d.shape[1])
-                # argpartition (O(n)) + exact tie-widening instead of a
-                # full-row argsort — the row sort was ~80% of the brute
-                # tail's wall time.  Distances here are exact f64, so
-                # "<= pool max" captures every k-th-boundary tie exactly.
-                part = np.argpartition(d, kk - 1, axis=1)[:, :kk]
-                pmax = np.take_along_axis(d, part, axis=1).max(axis=1)
-                wide = (d <= pmax[:, None]).sum(axis=1) > kk
-                for r in range(e - s):
-                    idxs = np.nonzero(d[r] <= pmax[r])[0] if wide[r] else part[r]
-                    dd = d[r][idxs]
-                    ii = ci_[idxs]
-                    o = np.lexsort((ii, dd))[:kk]
-                    dd, ii = dd[o], ii[o]
-                    if len(best_d[s + r]):
-                        md = np.concatenate([best_d[s + r], dd])
-                        mi = np.concatenate([best_i[s + r], ii])
-                        mo = np.lexsort((mi, md))[:k]
-                        best_d[s + r], best_i[s + r] = md[mo], mi[mo]
-                    else:
-                        best_d[s + r], best_i[s + r] = dd, ii
-        rows = {
-            "qid": [], "id": [], "dist": [], "rank": [],
-        }
-        for r in range(len(qid)):
-            n = len(best_d[r])
-            if not n:
-                continue
-            rows["qid"].append(np.full(n, qid[r], dtype=np.int64))
-            rows["id"].append(best_i[r])
-            rows["dist"].append(best_d[r])
-            rows["rank"].append(np.arange(1, n + 1, dtype=np.int32))
-        if rows["qid"]:
-            yield pd.DataFrame({c: np.concatenate(v) for c, v in rows.items()})
+        cols = _best_columns(qid, best_d, best_i)
+        if cols is not None:
+            yield pd.DataFrame(cols)
 
     from rindex_spark.plans.scan import spread_scan
 
@@ -701,6 +766,341 @@ def _unpack_best(batches):
         yield pd.DataFrame({"qid": qids, "id": i, "dist": d, "rank": rank})
 
 
+# --------------------------------------------------------------------------
+# Resident serving path: small query batches answered on the driver from
+# a cell-sorted copy of the points, with no ring round and no Spark job
+# over the points once the copy is held (GeoBlocks, EDBT 2021: answer
+# hot queries from a compact cell-ordered structure).
+
+# A point set whose (id, x, y, *extra_cols) values fit this many bytes
+# (8 per value: 48 MiB ~ 2.1M 2-D points) is small enough to hold on the
+# driver.  Known from the extent's n, so the gate costs no job.
+_RESIDENT_MAX_BYTES = 48 << 20
+# A query batch of at most this many rows is "small": knn_for_queries
+# answers it from a resident copy, and the ring loop always hands a
+# straggler set of at most this size to the brute tail, whatever its
+# flop gate says.
+_SMALL_BATCH = 512
+# mean points per resident CSR cell: cells only seed each query's
+# k-th-distance bound and gather its candidates, so they stay small
+_RESIDENT_PER_CELL = 8
+
+
+class _ResidentIndex:
+    """Driver copy of a point set: id / x / y / extra columns sorted by
+    cell (ix-major, so one cell column's cells are contiguous; x-sorted
+    within a cell, so a gathered candidate set is a few x-sorted runs
+    that the kernel's stable sort merges cheaply), CSR offsets per cell,
+    and a summed-area table of cell counts.
+
+    ``knn`` answers a query batch exactly with ``_knn_scan``, the brute
+    tail's kernel.  The cells only bound each query's k-th distance and
+    select its candidates, so a query's cost stays near its
+    neighbourhood instead of n:
+
+    1. expand Chebyshev rings around the query's (clamped) cell until
+       the block holds >= k points (counted in O(1) from the summed-area
+       table), and take the k-th distance among those points;
+    2. in 2-D, tighten that bound to the smallest cell-farthest-corner
+       distance that covers k points: every point of those cells lies
+       within it, so it is within one cell diagonal of the true k-th
+       distance even where step 1's square block overshoots by ~sqrt(2)
+       next to a dense cluster;
+    3. the candidates are the points of the cells whose nearest edge is
+       within the bound, and the bound turns on the kernel's box prune."""
+
+    def __init__(self, ids, xs, ys, es, extra_cols: tuple):
+        self.extra_cols = extra_cols
+        n = self.n = len(ids)
+        if n == 0:
+            return
+        self.x0, self.y0 = float(xs.min()), float(ys.min())
+        ex, ey = float(xs.max()) - self.x0, float(ys.max()) - self.y0
+        t = _RESIDENT_PER_CELL
+        # grid.grid_from_extent's sizing: ~n/t cells, per-axis floors
+        # keep near-1-D data from becoming a line of n cells
+        cs = max((ex * ey * t / n) ** 0.5, ex * t / n, ey * t / n)
+        self.cs = cs if cs > 0.0 else 1.0
+        self.nx = int(ex / self.cs) + 1
+        self.ny = int(ey / self.cs) + 1
+        # cell edges are widened by this much where they bound distances:
+        # floor() of a rounded quotient may place a point a few ulp
+        # outside its nominal cell
+        self.tol = 1e-9 * (self.cs + abs(self.x0) + abs(self.y0) + ex + ey)
+        cell = self._ix(xs) * self.ny + self._iy(ys)
+        order = np.lexsort((xs, cell))
+        self.ids, self.xs, self.ys = ids[order], xs[order], ys[order]
+        self.es = es[order] if es is not None else None
+        counts = np.bincount(cell, minlength=self.nx * self.ny)
+        self.counts = counts.reshape(self.nx, self.ny)
+        self.offsets = np.zeros(len(counts) + 1, dtype=np.int64)
+        np.cumsum(counts, out=self.offsets[1:])
+        self.sat = np.zeros((self.nx + 1, self.ny + 1), dtype=np.int64)
+        self.sat[1:, 1:] = self.counts.cumsum(0).cumsum(1)
+
+    @classmethod
+    def collect(cls, points: DataFrame, extra_cols: tuple) -> "_ResidentIndex":
+        """One scan job.  Rows with a null id or coordinate are dropped:
+        they have no distance (the ring path never meets them either)."""
+        import pyarrow.compute as pc
+
+        cols = ("id", "x", "y", *extra_cols)
+        tbl = points.select(*cols).toArrow()
+        valid = None
+        for c in cols:
+            v = pc.is_valid(tbl.column(c))
+            valid = v if valid is None else pc.and_(valid, v)
+        if valid is not None and tbl.num_rows and not pc.all(valid).as_py():
+            tbl = tbl.filter(valid)
+
+        def arr(c, dtype):
+            return tbl.column(c).to_numpy().astype(dtype, copy=False)
+
+        es = (
+            np.column_stack([arr(c, np.float64) for c in extra_cols])
+            if extra_cols
+            else None
+        )
+        return cls(arr("id", np.int64), arr("x", np.float64), arr("y", np.float64), es, extra_cols)
+
+    def _ix(self, v):
+        return np.clip(np.floor((v - self.x0) / self.cs), 0, self.nx - 1).astype(np.int64)
+
+    def _iy(self, v):
+        return np.clip(np.floor((v - self.y0) / self.cs), 0, self.ny - 1).astype(np.int64)
+
+    def _gather(self, cells: np.ndarray) -> np.ndarray:
+        """Positions of the points of ``cells`` (flat cell ids): one CSR
+        run per cell."""
+        starts = self.offsets[cells]
+        lens = self.offsets[cells + 1] - starts
+        return np.repeat(starts - np.cumsum(lens) + lens, lens) + np.arange(
+            int(lens.sum()), dtype=np.int64
+        )
+
+    def _block(self, ix0: int, ix1: int, iy0: int, iy1: int) -> np.ndarray:
+        """Flat ids of the cells of block [ix0, ix1] x [iy0, iy1]."""
+        return (
+            np.arange(ix0, ix1 + 1, dtype=np.int64)[:, None] * self.ny
+            + np.arange(iy0, iy1 + 1, dtype=np.int64)[None, :]
+        ).ravel()
+
+    def _dist(self, qx: float, qy: float, qe, idx: np.ndarray) -> np.ndarray:
+        d = qx - self.xs[idx]
+        d *= d
+        dy = qy - self.ys[idx]
+        dy *= dy
+        d += dy
+        for j in range(0 if qe is None else len(qe)):
+            dj = qe[j] - self.es[idx, j]
+            dj *= dj
+            d += dj
+        return np.sqrt(d, out=d)
+
+    def _ring_radius(self, cix, ciy, k: int) -> np.ndarray:
+        """Per query, the smallest Chebyshev ring radius whose block
+        around the query's cell holds >= k points (k <= n): geometric
+        growth, then bisection, all counted from the summed-area table."""
+
+        def holds(q, r):
+            x0 = np.maximum(cix[q] - r, 0)
+            x1 = np.minimum(cix[q] + r, self.nx - 1) + 1
+            y0 = np.maximum(ciy[q] - r, 0)
+            y1 = np.minimum(ciy[q] + r, self.ny - 1) + 1
+            s = self.sat
+            return s[x1, y1] - s[x0, y1] - s[x1, y0] + s[x0, y0] >= k
+
+        nq = len(cix)
+        lo = np.full(nq, -1, dtype=np.int64)  # largest radius known short
+        hi = np.zeros(nq, dtype=np.int64)
+        todo = np.arange(nq)
+        while len(todo):
+            todo = todo[~holds(todo, hi[todo])]
+            lo[todo] = hi[todo]
+            hi[todo] = np.maximum(hi[todo] * 2, hi[todo] + 1)
+        todo = np.flatnonzero(hi - lo > 1)
+        while len(todo):
+            mid = (lo[todo] + hi[todo]) // 2
+            ok = holds(todo, mid)
+            hi[todo[ok]] = mid[ok]
+            lo[todo[~ok]] = mid[~ok]
+            todo = todo[hi[todo] - lo[todo] > 1]
+        return hi
+
+    def _candidates(self, qx: float, qy: float, qe, cix: int, ciy: int, r: int, k: int):
+        """(k-th-distance upper bound, candidate positions) of one query."""
+        block = self._gather(
+            self._block(
+                max(cix - r, 0), min(cix + r, self.nx - 1),
+                max(ciy - r, 0), min(ciy + r, self.ny - 1),
+            )
+        )
+        ub = float(np.partition(self._dist(qx, qy, qe, block), k - 1)[k - 1])
+        Me = ub * (1.0 + 1e-9) + 1e-300
+        ix0, ix1 = int(self._ix(qx - Me)), int(self._ix(qx + Me))
+        iy0, iy1 = int(self._iy(qy - Me)), int(self._iy(qy + Me))
+        cs, tol = self.cs, self.tol
+        xl = self.x0 + np.arange(ix0, ix1 + 1) * cs - tol
+        yl = self.y0 + np.arange(iy0, iy1 + 1) * cs - tol
+        xh, yh = xl + (cs + 2 * tol), yl + (cs + 2 * tol)
+        near2 = (
+            np.maximum(np.maximum(xl - qx, qx - xh), 0.0) ** 2
+        )[:, None] + (np.maximum(np.maximum(yl - qy, qy - yh), 0.0) ** 2)[None, :]
+        cnt = self.counts[ix0 : ix1 + 1, iy0 : iy1 + 1]
+        if qe is None:
+            # the box of the bound holds every cell within it, hence the
+            # k points it was taken from: the cover always exists
+            far2 = (np.maximum(qx - xl, xh - qx) ** 2)[:, None] + (
+                np.maximum(qy - yl, yh - qy) ** 2
+            )[None, :]
+            f = far2[cnt > 0]
+            o = np.argsort(f, kind="stable")
+            cover = np.searchsorted(np.cumsum(cnt[cnt > 0][o]), k)
+            cell_ub = float(np.sqrt(f[o][cover])) * (1.0 + 1e-9)
+            if cell_ub < ub:
+                ub = cell_ub
+                Me = ub * (1.0 + 1e-9) + 1e-300
+        sel = np.flatnonzero((near2 <= Me * Me).ravel() & (cnt.ravel() > 0))
+        w = iy1 - iy0 + 1
+        cells = (ix0 + sel // w) * self.ny + iy0 + sel % w
+        return ub, self._gather(cells)
+
+    def knn(self, qid, qx, qy, qe, k: int) -> dict | None:
+        """Exact (qid, id, dist, rank) columns for the query batch, or
+        None when nothing matches.  Queries with a NaN coordinate (a
+        null in the batch) have no distance and get no rows."""
+        keep = ~(np.isnan(qx) | np.isnan(qy))
+        if qe is not None:
+            keep &= ~np.isnan(qe).any(axis=1)
+        if self.n == 0 or not keep.any():
+            return None
+        qid, qx, qy = qid[keep], qx[keep], qy[keep]
+        qe = qe[keep] if qe is not None else None
+        nq = len(qx)
+        best_d = [np.empty(0)] * nq
+        best_i = [np.empty(0, dtype=np.int64)] * nq
+        if k >= self.n:
+            # every point is an answer: one unbounded scan for the batch
+            _knn_scan(
+                qx, qy, qe, np.full(nq, np.inf), self.xs, self.ys, self.ids, self.es,
+                k, best_d, best_i,
+            )
+            return _best_columns(qid, best_d, best_i)
+        cix, ciy = self._ix(qx), self._iy(qy)
+        r = self._ring_radius(cix, ciy, k)
+        for j in range(nq):
+            e = None if qe is None else qe[j]
+            ub, idx = self._candidates(qx[j], qy[j], e, cix[j], ciy[j], r[j], k)
+            bd, bi = best_d[j : j + 1], best_i[j : j + 1]
+            _knn_scan(
+                qx[j : j + 1], qy[j : j + 1], None if e is None else qe[j : j + 1],
+                np.array([ub]), self.xs[idx], self.ys[idx], self.ids[idx],
+                None if self.es is None else self.es[idx], k, bd, bi,
+            )
+            best_d[j], best_i[j] = bd[0], bi[0]
+        return _best_columns(qid, best_d, best_i)
+
+
+# Resident copies of PERSISTED point frames, keyed weakly by the frame
+# object: dropping the frame drops its copy.  Each entry remembers the
+# identity of the cache entry it was read from; a call that finds the
+# frame no longer cached (unpersisted, cache cleared, or persisted anew,
+# possibly over changed files) drops or rebuilds the copy.
+_resident = weakref.WeakKeyDictionary()
+_resident_lock = threading.Lock()
+
+
+def _cache_token(points: DataFrame):
+    """Identity of the cache entry backing ``points``, or None when the
+    frame is not persisted (or the session cannot say, e.g. a remote
+    client — then the frame is treated as not persisted)."""
+    if not getattr(points, "is_cached", False):
+        return None
+    from py4j.protocol import Py4JError
+
+    try:
+        cd = (
+            points.sparkSession._jsparkSession.sharedState()
+            .cacheManager()
+            .lookupCachedData(points._jdf)
+        )
+        if not cd.isDefined():
+            return None
+        return points.sparkSession._jvm.System.identityHashCode(
+            cd.get().cachedRepresentation().cacheBuilder()
+        )
+    except (AttributeError, Py4JError):
+        return None
+
+
+def _resident_index(points: DataFrame, extra_cols: tuple) -> _ResidentIndex:
+    """The driver copy of ``points``: held across calls for a persisted
+    frame, collected afresh (one scan job) for any other — a frame that
+    is not persisted may be re-read from changed files, so it is never
+    held."""
+    token = _cache_token(points)
+    if token is None:
+        with _resident_lock:
+            _resident.pop(points, None)
+        return _ResidentIndex.collect(points, extra_cols)
+    with _resident_lock:
+        held = _resident.get(points)
+        if held is None or held[0] != token or held[1].extra_cols != extra_cols:
+            held = (token, _ResidentIndex.collect(points, extra_cols))
+            _resident[points] = held
+        return held[1]
+
+
+def _collect_queries(queries: DataFrame, extra_cols: tuple, limit: int):
+    """At most ``limit`` rows (qid, x, y, *extra_cols) of ``queries`` as
+    an Arrow table.  A local frame (e.g. createDataFrame of driver data)
+    is collected without a job; any other in one job — toArrow, since
+    collecting a limit scans partitions in growing waves, a job each."""
+    import pyarrow as pa
+
+    cols = ("qid", "x", "y", *extra_cols)
+    q = queries.select(*cols).limit(limit)
+    if not queries.isLocal():
+        return q.toArrow()
+    rows = q.collect()
+    return pa.table(
+        {
+            c: pa.array([r[i] for r in rows], pa.int64() if i == 0 else pa.float64())
+            for i, c in enumerate(cols)
+        }
+    )
+
+
+def _resident_knn(points: DataFrame, qtbl, k: int, extra_cols: tuple) -> DataFrame:
+    """knn_for_queries' small-batch path: answer the collected query
+    batch (an Arrow table of qid, x, y, *extra_cols) on the driver; the
+    result is a local DataFrame.  A query with a null qid names no query
+    and gets no rows."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    spark = points.sparkSession
+    index = _resident_index(points, extra_cols)
+    _record_stats(0, 0, index.n, 0)
+    if qtbl.column("qid").null_count:
+        qtbl = qtbl.filter(pc.is_valid(qtbl.column("qid")))
+
+    def col(name):
+        # nulls -> NaN: such queries are skipped by index.knn
+        return qtbl.column(name).to_numpy().astype(np.float64, copy=False)
+
+    cols = index.knn(
+        qtbl.column("qid").to_numpy().astype(np.int64, copy=False),
+        col("x"),
+        col("y"),
+        np.column_stack([col(c) for c in extra_cols]) if extra_cols else None,
+        k,
+    )
+    if cols is None:
+        return spark.createDataFrame([], _OUT_SCHEMA)
+    return spark.createDataFrame(pa.table(cols), schema=_OUT_SCHEMA)
+
+
 def knn_for_queries(
     points: DataFrame,
     queries: DataFrame,
@@ -738,6 +1138,30 @@ def knn_for_queries(
     ops on the same point set (bench suites, batch replay) pass it
     together with ``spec`` so no per-call fixed driver job remains
     (grid.grid_and_extent computes both in one aggregate).
+
+    Serving small batches.  When ``points`` fits ``_RESIDENT_MAX_BYTES``
+    (8 bytes per id / coordinate value, 48 MiB: ~2.1M 2-D points — known
+    from the extent's n, no job) and the queries are external
+    (``queries_within_extent=False``), one query-scale job collects at
+    most ``_SMALL_BATCH`` + 1 query rows (a driver-local query frame
+    needs no job); it replaces the ring path's query-extent aggregate
+    for small batches.  A batch of at most ``_SMALL_BATCH`` (512)
+    queries is then answered exactly on the driver from a cell-sorted
+    numpy copy of the points (``_ResidentIndex``, the brute tail's
+    kernel, bit-identical rows) and returned as a local DataFrame: no
+    ring round.  The copy is held across calls only for a PERSISTED
+    frame (``points.is_cached``), keyed weakly by the frame object; a
+    call that finds the frame no longer cached (unpersisted, cache
+    cleared, or persisted anew) drops or rebuilds it, and dropping the
+    frame object drops the copy.  So a call on a resident frame runs at
+    most one job (the query collect) plus whatever consumes the result.  A
+    frame that is not persisted may be re-read from changed files, so
+    it is never held: each call collects it in one scan job.  Bulk
+    batches (more than 512 queries), the self graph
+    (``build_knn_graph``) and ``apply_batch``'s repair
+    (``queries_within_extent=True``) keep the ring rounds; a bulk batch
+    from a query frame that is not driver-local pays the collect job
+    on top.
     """
     extra_cols = tuple(extra_cols)
     n_extra = len(extra_cols)
@@ -746,11 +1170,11 @@ def knn_for_queries(
     # call agrees (the annulus trim's klo is interpreted in THIS scale)
     _ss = int(os.environ.get("RINDEX_SUPER_SHIFT", str(_SUPER_SHIFT)))
     _S = 1 << _ss
-    out_schema = "qid long, id long, dist double, rank int"
     # k = 0 / empty index => empty result (rindex.rs:198-200), before any
     # config validation (the reference validates k only at construction).
     if k <= 0:
-        return spark.createDataFrame([], out_schema)
+        _record_stats(0, 0, 0, 0)
+        return spark.createDataFrame([], _OUT_SCHEMA)
     cfg = cfg or EngineConfig(k=k)
 
     # one aggregate job yields both the grid spec and the extent
@@ -762,28 +1186,18 @@ def knn_for_queries(
         F.max("y").alias("ymax"),
     ).collect()[0]
     if not ext["n"]:
-        return spark.createDataFrame([], out_schema)
+        _record_stats(0, 0, 0, 0)
+        return spark.createDataFrame([], _OUT_SCHEMA)
+    if not queries_within_extent and ext["n"] * 8 * (3 + n_extra) <= _RESIDENT_MAX_BYTES:
+        qtbl = _collect_queries(queries, extra_cols, _SMALL_BATCH + 1)
+        if qtbl.num_rows <= _SMALL_BATCH:
+            return _resident_knn(points, qtbl, k, extra_cols)
     if spec is None:
-        from rindex_spark.grid import grid_from_extent
+        from rindex_spark.grid import grid_from_extent, shrink_to_occupancy
 
-        spec = grid_from_extent(ext, cfg)
         # density-adaptive shrink: skewed (clustered/urban) data makes
         # mean-sized cells quadratically expensive in the cores
-        from rindex_spark.grid import with_cells as _wc
-
-        occ = (
-            _wc(points.select("x", "y"), spec)
-            .groupBy("ix", "iy")
-            .agg(F.count(F.lit(1)).alias("occ"))
-        )
-        p = occ.agg(F.expr("percentile(occ, 0.95, occ)").alias("p")).collect()[0]["p"]
-        t = cfg.effective_target_per_cell
-        if p and p > 2.0 * t:
-            spec = GridSpec(
-                cell_size=max(spec.cell_size * (t / p) ** 0.5, 1e-9),
-                x0=spec.x0,
-                y0=spec.y0,
-            )
+        spec = shrink_to_occupancy(points, grid_from_extent(ext, cfg), cfg)
 
     # Ring radius that certifies full coverage of the data extent from
     # ANY query cell (termination backstop for k > n / far-out queries):
@@ -1034,7 +1448,7 @@ def knn_for_queries(
         finished_parts.append(
             state.filter("is_done")
             .select("qid", "best_dist", "best_id")
-            .mapInPandas(_unpack_best, schema=out_schema)
+            .mapInPandas(_unpack_best, schema=_OUT_SCHEMA)
         )
 
         next_frontier = (
@@ -1065,8 +1479,8 @@ def knn_for_queries(
         n_left = next_frontier.count()
         rounds_run = _round + 1
         if stats_on:
-            # recomputes the candidate join (cand is uncached) — one
-            # extra job per round, opt-in by construction
+            # re-runs the uncached candidate join and its inputs: 4-6
+            # extra jobs per call measured, opt-in by construction
             shipped_rows += cand.count()
         if debug:
             # candidate-volume diagnostic (costs one extra job; debug
@@ -1087,7 +1501,7 @@ def knn_for_queries(
         # The absolute row cap bounds the driver collect + closure size
         # even when the point set is tiny (flop gate alone would admit
         # multi-million-row collects).
-        if (n_left * ext["n"] <= 4e9 and n_left <= 200_000) or n_left <= 512:
+        if (n_left * ext["n"] <= 4e9 and n_left <= 200_000) or n_left <= _SMALL_BATCH:
             # cnt/kth ride along: a straggler's carried k-th distance
             # is the exact box-prune bound for the brute scan
             rows = next_frontier.select(
@@ -1107,17 +1521,7 @@ def knn_for_queries(
             f"knn_for_queries did not converge in {cfg.max_rounds} rounds"
         )
 
-    if stats_on:
-        last_run_stats.clear()
-        last_run_stats.update(
-            {
-                "rounds": rounds_run,
-                "shipped_rows": int(shipped_rows),
-                "n_points": int(ext["n"]),
-                "replication": round(shipped_rows / max(int(ext["n"]), 1), 3),
-                "brute_tail_queries": int(brute_tail),
-            }
-        )
+    _record_stats(rounds_run, shipped_rows, ext["n"], brute_tail)
     out = finished_parts[0]
     for part in finished_parts[1:]:
         out = out.unionByName(part)

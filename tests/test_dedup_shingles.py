@@ -125,3 +125,28 @@ def test_exploded_grams_matches_explode_of_with_shingles(spark):
                 r["gram"] for r in _exploded_grams(src, "text", n).collect()
             )
             assert old_noid == new_noid, f"n={n} (no id)"
+
+    # the id column keeps its own type and its nulls: string ids, and
+    # long ids with nulls (which a pandas round trip turns into NaN
+    # floats), come out exactly as the explode path gives them
+    typed = [
+        spark.createDataFrame(
+            [(f"doc-{i}", t) for i, t in enumerate(EDGE_TEXTS)], "doc string, text string"
+        ),
+        spark.createDataFrame(
+            [(None if i % 3 == 0 else i + 2**60, t) for i, t in enumerate(EDGE_TEXTS)],
+            "doc long, text string",
+        ),
+    ]
+    for src, has_null in zip(typed, (False, True)):
+        out = _exploded_grams(src, "text", 3, id_col="doc")
+        assert out.schema["doc"].dataType == src.schema["doc"].dataType
+        old = Counter(
+            (r["doc"], r["g"])
+            for r in with_shingles(src, "text", 3)
+            .select("doc", F.explode("shingles").alias("g"))
+            .collect()
+        )
+        new = Counter((r["doc"], r["gram"]) for r in out.collect())
+        assert old == new
+        assert any(d is None for d, _ in new) == has_null
