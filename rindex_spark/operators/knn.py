@@ -807,9 +807,13 @@ class _ResidentIndex:
        distance even where step 1's square block overshoots by ~sqrt(2)
        next to a dense cluster;
     3. the candidates are the points of the cells whose nearest edge is
-       within the bound, and the bound turns on the kernel's box prune."""
+       within the bound, and the bound turns on the kernel's box prune.
 
-    def __init__(self, ids, xs, ys, es, extra_cols: tuple):
+    ``knn_dist`` (optional, 2-D): each point's current k-th neighbour
+    distance (inf below k neighbours, -inf for a point that holds no
+    ball); it turns on ``reverse``, pruned by the per-cell maximum."""
+
+    def __init__(self, ids, xs, ys, es, extra_cols: tuple, knn_dist=None):
         self.extra_cols = extra_cols
         n = self.n = len(ids)
         if n == 0:
@@ -837,15 +841,32 @@ class _ResidentIndex:
         np.cumsum(counts, out=self.offsets[1:])
         self.sat = np.zeros((self.nx + 1, self.ny + 1), dtype=np.int64)
         self.sat[1:, 1:] = self.counts.cumsum(0).cumsum(1)
+        if knn_dist is not None:
+            self.knn_dist = knn_dist[order]
+            cell_kd = np.full(len(counts), -np.inf)
+            nz = np.flatnonzero(counts)
+            cell_kd[nz] = np.maximum.reduceat(self.knn_dist, self.offsets[nz])
+            self.cell_kd = cell_kd.reshape(self.nx, self.ny)
+            # cells holding a point with fewer than k neighbours meet
+            # every query; the others only within the largest finite ball
+            self.kd_open = np.flatnonzero(cell_kd == np.inf)
+            finite = cell_kd[np.isfinite(cell_kd)]
+            self.kd_reach = float(finite.max()) if len(finite) else -np.inf
 
     @classmethod
     def collect(cls, points: DataFrame, extra_cols: tuple) -> "_ResidentIndex":
-        """One scan job.  Rows with a null id or coordinate are dropped:
-        they have no distance (the ring path never meets them either)."""
+        """One scan job."""
+        cols = ("id", "x", "y", *extra_cols)
+        return cls.from_table(points.select(*cols).toArrow(), extra_cols)
+
+    @classmethod
+    def from_table(cls, tbl, extra_cols: tuple) -> "_ResidentIndex":
+        """Index of an Arrow table's (id, x, y, *extra_cols).  Rows with a
+        null id or coordinate are dropped: they have no distance (the
+        ring path never meets them either)."""
         import pyarrow.compute as pc
 
         cols = ("id", "x", "y", *extra_cols)
-        tbl = points.select(*cols).toArrow()
         valid = None
         for c in cols:
             v = pc.is_valid(tbl.column(c))
@@ -965,6 +986,36 @@ class _ResidentIndex:
         cells = (ix0 + sel // w) * self.ny + iy0 + sel % w
         return ub, self._gather(cells)
 
+    def reverse(self, qx: float, qy: float) -> np.ndarray:
+        """Positions of the points whose k-NN ball holds the 2-D point q:
+        dist(q, p) <= knn_dist[p], inclusive, so a point tied with p's
+        k-th neighbour counts (it may win the (dist, id) tie-break).  Only
+        cells whose near edge is within their largest ball are scanned,
+        so the cost follows q's neighbourhood rather than n."""
+        if self.n == 0:
+            return np.empty(0, dtype=np.int64)
+        cells = [self.kd_open]
+        if self.kd_reach >= 0.0:
+            Me = self.kd_reach * (1.0 + 1e-9) + 1e-300
+            ix0, ix1 = int(self._ix(qx - Me)), int(self._ix(qx + Me))
+            iy0, iy1 = int(self._iy(qy - Me)), int(self._iy(qy + Me))
+            cs, tol = self.cs, self.tol
+            xl = self.x0 + np.arange(ix0, ix1 + 1) * cs - tol
+            yl = self.y0 + np.arange(iy0, iy1 + 1) * cs - tol
+            xh, yh = xl + (cs + 2 * tol), yl + (cs + 2 * tol)
+            near2 = (
+                np.maximum(np.maximum(xl - qx, qx - xh), 0.0) ** 2
+            )[:, None] + (np.maximum(np.maximum(yl - qy, qy - yh), 0.0) ** 2)[None, :]
+            kd = self.cell_kd[ix0 : ix1 + 1, iy0 : iy1 + 1]
+            lim = kd * (1.0 + 1e-9) + 1e-300
+            sel = np.flatnonzero(
+                ((kd >= 0.0) & np.isfinite(kd) & (near2 <= lim * lim)).ravel()
+            )
+            w = iy1 - iy0 + 1
+            cells.append((ix0 + sel // w) * self.ny + iy0 + sel % w)
+        idx = self._gather(np.concatenate(cells))
+        return idx[self._dist(qx, qy, None, idx) <= self.knn_dist[idx]]
+
     def knn(self, qid, qx, qy, qe, k: int) -> dict | None:
         """Exact (qid, id, dist, rank) columns for the query batch, or
         None when nothing matches.  Queries with a NaN coordinate (a
@@ -1033,11 +1084,70 @@ def _cache_token(points: DataFrame):
         return None
 
 
+# Driver copies of committed index states (plans.batches, plans.checkpoint):
+# frame -> _Copy, keyed weakly like _resident and under the same lock.  A
+# copy is registered only for a frame whose rows are known to equal the
+# table: a local frame built from it, or a read of files that the
+# registering call wrote or read itself.  It needs no cache check; it is
+# dropped with its frame, or when the files under its path are rewritten.
+_registered = weakref.WeakKeyDictionary()
+
+# bytes per point row (id, x, y) and per graph row (src, dst, dist, rank)
+# of a registered state, counted against _RESIDENT_MAX_BYTES
+_POINT_BYTES = 24
+_GRAPH_ROW_BYTES = 28
+
+
+def fits_resident(n_points: int, n_graph_rows: int) -> bool:
+    """Whether a state of this size may be held on the driver."""
+    return n_points * _POINT_BYTES + n_graph_rows * _GRAPH_ROW_BYTES <= _RESIDENT_MAX_BYTES
+
+
+class _Copy:
+    """A registered table, the directory its frame reads (None for a
+    local frame), and the resident index built from it on first use."""
+
+    __slots__ = ("table", "path", "index")
+
+    def __init__(self, table, path):
+        self.table, self.path, self.index = table, path, None
+
+
+def register_copy(frame: DataFrame, table, path: str | None = None) -> DataFrame:
+    """Hold ``table`` as the driver copy of ``frame``; returns ``frame``."""
+    with _resident_lock:
+        _registered[frame] = _Copy(table, path)
+    return frame
+
+
+def registered_table(frame: DataFrame):
+    """The Arrow table registered for ``frame``, or None."""
+    with _resident_lock:
+        held = _registered.get(frame)
+    return None if held is None else held.table
+
+
+def drop_copies(path: str) -> None:
+    """Drop the copies of every frame that reads files under ``path``."""
+    root = os.path.join(os.path.abspath(path), "")
+    with _resident_lock:
+        for frame, held in list(_registered.items()):
+            if held.path is not None and os.path.join(os.path.abspath(held.path), "").startswith(root):
+                del _registered[frame]
+
+
 def _resident_index(points: DataFrame, extra_cols: tuple) -> _ResidentIndex:
-    """The driver copy of ``points``: held across calls for a persisted
-    frame, collected afresh (one scan job) for any other — a frame that
-    is not persisted may be re-read from changed files, so it is never
-    held."""
+    """The driver copy of ``points``: built from its registered table, or
+    held across calls for a persisted frame, or collected afresh (one
+    scan job) for any other — a frame that is not persisted may be
+    re-read from changed files, so it is never held."""
+    with _resident_lock:
+        reg = _registered.get(points)
+        # registered tables are 2-D states (id, x, y)
+        if reg is not None and not extra_cols:
+            if reg.index is None:
+                reg.index = _ResidentIndex.from_table(reg.table, ())
+            return reg.index
     token = _cache_token(points)
     if token is None:
         with _resident_lock:
@@ -1052,20 +1162,22 @@ def _resident_index(points: DataFrame, extra_cols: tuple) -> _ResidentIndex:
 
 
 def _collect_queries(queries: DataFrame, extra_cols: tuple, limit: int):
-    """At most ``limit`` rows (qid, x, y, *extra_cols) of ``queries`` as
-    an Arrow table.  A local frame (e.g. createDataFrame of driver data)
-    is collected without a job; any other in one job — toArrow, since
-    collecting a limit scans partitions in growing waves, a job each."""
+    """The rows (qid, x, y, *extra_cols) of ``queries`` as an Arrow table:
+    at most ``limit`` of a distributed frame, in one job — toArrow, since
+    collecting a limit scans partitions in growing waves, a job each.  A
+    local frame (e.g. createDataFrame of driver data) is collected whole
+    with no job: its rows are on the driver already, and a select or
+    limit on it costs more plan analysis than collecting them (~10 ms
+    against ~5 ms for 16 rows, ~30 ms against ~20 ms for 2,000)."""
     import pyarrow as pa
 
     cols = ("qid", "x", "y", *extra_cols)
-    q = queries.select(*cols).limit(limit)
     if not queries.isLocal():
-        return q.toArrow()
-    rows = q.collect()
+        return queries.select(*cols).limit(limit).toArrow()
+    rows = queries.collect()
     return pa.table(
         {
-            c: pa.array([r[i] for r in rows], pa.int64() if i == 0 else pa.float64())
+            c: pa.array([r[c] for r in rows], pa.int64() if i == 0 else pa.float64())
             for i, c in enumerate(cols)
         }
     )
@@ -1098,7 +1210,9 @@ def _resident_knn(points: DataFrame, qtbl, k: int, extra_cols: tuple) -> DataFra
     )
     if cols is None:
         return spark.createDataFrame([], _OUT_SCHEMA)
-    return spark.createDataFrame(pa.table(cols), schema=_OUT_SCHEMA)
+    # the Arrow types map to _OUT_SCHEMA exactly; naming the schema again
+    # would only add a DDL parse (~9 ms) to every call
+    return spark.createDataFrame(pa.table(cols))
 
 
 def knn_for_queries(
@@ -1144,21 +1258,23 @@ def knn_for_queries(
     from the extent's n, no job) and the queries are external
     (``queries_within_extent=False``), one query-scale job collects at
     most ``_SMALL_BATCH`` + 1 query rows (a driver-local query frame
-    needs no job); it replaces the ring path's query-extent aggregate
-    for small batches.  A batch of at most ``_SMALL_BATCH`` (512)
+    needs no job and is collected whole); it replaces the ring path's
+    query-extent aggregate for small batches.  A batch of at most ``_SMALL_BATCH`` (512)
     queries is then answered exactly on the driver from a cell-sorted
     numpy copy of the points (``_ResidentIndex``, the brute tail's
     kernel, bit-identical rows) and returned as a local DataFrame: no
-    ring round.  The copy is held across calls only for a PERSISTED
-    frame (``points.is_cached``), keyed weakly by the frame object; a
-    call that finds the frame no longer cached (unpersisted, cache
-    cleared, or persisted anew) drops or rebuilds it, and dropping the
-    frame object drops the copy.  So a call on a resident frame runs at
-    most one job (the query collect) plus whatever consumes the result.  A
-    frame that is not persisted may be re-read from changed files, so
-    it is never held: each call collects it in one scan job.  Bulk
-    batches (more than 512 queries), the self graph
-    (``build_knn_graph``) and ``apply_batch``'s repair
+    ring round.  A frame with a registered copy (a committed index
+    state, see ``register_copy``) is indexed from that table.  Otherwise
+    the copy is held across calls only for a PERSISTED frame
+    (``points.is_cached``), keyed weakly by the frame object; a call that
+    finds the frame no longer cached (unpersisted, cache cleared, or
+    persisted anew) drops or rebuilds it, and dropping the frame object
+    drops the copy.  So a call on a resident frame runs at most one job
+    (the query collect) plus whatever consumes the result.  A frame that
+    is neither registered nor persisted may be re-read from changed
+    files, so it is never held: each call collects it in one scan job.
+    Bulk batches (more than 512 queries), the self graph
+    (``build_knn_graph``) and the distributed repair of ``apply_batch``
     (``queries_within_extent=True``) keep the ring rounds; a bulk batch
     from a query frame that is not driver-local pays the collect job
     on top.

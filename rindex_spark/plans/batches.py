@@ -35,9 +35,20 @@ single-op folds (proved by the replay tests at batch sizes 1/16/full,
 mirroring lib/tests/random.rs / graph.rs).  Within one batch, an
 insert-then-delete of the same id cancels out before the fold.
 
-Scale notes: per batch the driver holds only op COUNTS; all data-sized
-state lives in DataFrames.  Insert-only and delete-only batches skip
-the dead half of the repair (the common case in streaming ingest).
+Small folds run on the driver.  A state that fits the resident byte
+budget (``knn._RESIDENT_MAX_BYTES``: 24 B per point plus 28 B per graph
+row) carries a driver copy, an Arrow table per frame registered in
+``knn``'s copy registry by ``empty_state``, by the driver fold and by
+``BatchCheckpointer.write``/``load``.  A batch of at most
+``knn._SMALL_BATCH`` ops on such a state is folded on that copy with the
+same affected set, computed in numpy (losers by ``np.isin``, gainers by
+``_ResidentIndex.reverse``, every affected point recomputed by
+``_ResidentIndex.knn``, the ring path's kernel and tie-break, so rows are
+bit-identical), and returns local frames with no Spark job; collecting
+ops from frames that are not driver-local costs one job.  Bulk batches
+and larger states keep the distributed plan above, in which the driver
+holds only op counts.  Insert-only and delete-only batches skip the dead
+half of the repair (the common case in streaming ingest).
 """
 
 from __future__ import annotations
@@ -45,17 +56,32 @@ from __future__ import annotations
 import os
 import time as _time
 from dataclasses import dataclass
+from functools import reduce
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from rindex_spark.config import EngineConfig, GridSpec
 from rindex_spark.grid import infer_grid
-from rindex_spark.operators.knn import knn_for_queries
+from rindex_spark.operators import knn as _knn
+from rindex_spark.operators.knn import (
+    _ResidentIndex,
+    fits_resident,
+    knn_for_queries,
+    register_copy,
+    registered_table,
+)
 from rindex_spark.operators.rknn import reverse_knn
 
-GRAPH_SCHEMA = "src long, dst long, dist double, rank int"
-POINTS_SCHEMA = "id long, x double, y double"
+POINTS_ARROW = pa.schema([("id", pa.int64()), ("x", pa.float64()), ("y", pa.float64())])
+GRAPH_ARROW = pa.schema(
+    [("src", pa.int64()), ("dst", pa.int64()), ("dist", pa.float64()), ("rank", pa.int32())]
+)
+_IDS_ARROW = pa.schema([("id", pa.int64())])
 
 
 @dataclass
@@ -71,18 +97,143 @@ class IndexState:
     k: int
 
 
-def empty_state(spark, k: int) -> IndexState:
+def _frame(spark, table: pa.Table) -> DataFrame:
+    """A local frame of an Arrow table (no job)."""
+    if not table.num_rows:
+        return spark.createDataFrame([], from_arrow_schema(table.schema))
+    return spark.createDataFrame(table)
+
+
+def _local_state(spark, points: pa.Table, graph: pa.Table, k: int) -> IndexState:
+    """A state of local frames, registered with their tables."""
     return IndexState(
-        points=spark.createDataFrame([], POINTS_SCHEMA),
-        graph=spark.createDataFrame([], GRAPH_SCHEMA),
+        points=register_copy(_frame(spark, points), points),
+        graph=register_copy(_frame(spark, graph), graph),
         k=k,
+    )
+
+
+def empty_state(spark, k: int) -> IndexState:
+    return _local_state(spark, POINTS_ARROW.empty_table(), GRAPH_ARROW.empty_table(), k)
+
+
+def _rows_table(rows, schema: pa.Schema) -> pa.Table:
+    """Driver rows (tuples in ``schema``'s column order) as an Arrow table."""
+    cols = list(zip(*rows)) if rows else [[] for _ in schema]
+    return pa.table({f.name: pa.array(c, f.type) for f, c in zip(schema, cols)})
+
+
+def _ops_on_driver(inserts, delete_ids, limit: int):
+    """The batch's (insert table, delete ids) on the driver, or None when
+    it holds more than ``limit`` ops.  ``None`` for either side means no
+    ops of that kind.  Row lists, Arrow tables and local frames cost no
+    job; frames that are not local are collected together, at most
+    ``limit`` + 1 rows, in one job."""
+    tables, remote = {}, []
+    for side, ops, schema in (("ins", inserts, POINTS_ARROW), ("del", delete_ids, _IDS_ARROW)):
+        if ops is None:
+            tables[side] = schema.empty_table()
+        elif isinstance(ops, pa.Table):
+            tables[side] = ops.select(schema.names).cast(schema)
+        elif not isinstance(ops, DataFrame):
+            tables[side] = _rows_table(ops, schema)
+        elif ops.isLocal():
+            tables[side] = _rows_table(ops.select(*schema.names).collect(), schema)
+        else:
+            nul = F.lit(None).cast("double")
+            remote.append(
+                ops.select(
+                    F.lit(side == "del").alias("_del"),
+                    F.col("id").cast("long").alias("id"),
+                    *(
+                        [nul.alias("x"), nul.alias("y")]
+                        if side == "del"
+                        else [F.col("x").cast("double"), F.col("y").cast("double")]
+                    ),
+                )
+            )
+    if remote:
+        got = reduce(DataFrame.unionByName, remote).limit(limit + 1).toArrow()
+        is_del = got.column("_del")
+        for side, schema, mask in (
+            ("ins", POINTS_ARROW, pc.invert(is_del)),
+            ("del", _IDS_ARROW, is_del),
+        ):
+            if side not in tables:
+                tables[side] = got.filter(mask).select(schema.names).cast(schema)
+    if tables["ins"].num_rows + tables["del"].num_rows > limit:
+        return None
+    return tables["ins"], tables["del"].column("id").to_numpy().astype(np.int64, copy=False)
+
+
+def _as_frame(spark, ops, schema: pa.Schema) -> DataFrame:
+    if isinstance(ops, DataFrame):
+        return ops
+    if not isinstance(ops, pa.Table):
+        ops = _rows_table(ops, schema)
+    return _frame(spark, ops.select(schema.names).cast(schema))
+
+
+def _fold_on_driver(points: pa.Table, graph: pa.Table, ins: pa.Table, dels: np.ndarray, k: int):
+    """apply_batch's repair on driver copies; returns the folded (points,
+    graph) tables.  The affected set is the distributed plan's: inserts,
+    losers (``src`` of a row whose ``dst`` is deleted) and gainers
+    (survivors p with dist(p, insert) <= p's k-th distance, inclusive;
+    inf below k rows).  Every affected point is recomputed on the folded
+    set; a gainer's new list is exact however it was reached, so this
+    matches the merge-only path row for row."""
+
+    def col(t, c, dtype):
+        return t.column(c).to_numpy().astype(dtype, copy=False)
+
+    pid, px, py = col(points, "id", np.int64), col(points, "x", np.float64), col(points, "y", np.float64)
+    src, dst = col(graph, "src", np.int64), col(graph, "dst", np.int64)
+    dist, rank = col(graph, "dist", np.float64), col(graph, "rank", np.int64)
+    iid, ix, iy = col(ins, "id", np.int64), col(ins, "x", np.float64), col(ins, "y", np.float64)
+    alive = ~np.isin(pid, dels)
+
+    # each point's k-th neighbour distance: its rank-k row's, inf when it
+    # has fewer than k rows
+    kd = np.full(len(pid), np.inf)
+    kth = np.flatnonzero(rank == k)
+    if len(kth) and len(pid):
+        o = np.argsort(pid, kind="stable")
+        at = o[np.minimum(np.searchsorted(pid, src[kth], sorter=o), len(pid) - 1)]
+        hit = pid[at] == src[kth]
+        kd[at[hit]] = dist[kth[hit]]
+
+    nid = np.concatenate([pid[alive], iid])
+    nx = np.concatenate([px[alive], ix])
+    ny = np.concatenate([py[alive], iy])
+    # inserted points hold no ball yet: -inf keeps them out of reverse()
+    index = _ResidentIndex(
+        nid, nx, ny, None, (), knn_dist=np.concatenate([kd[alive], np.full(len(iid), -np.inf)])
+    )
+    lost = src[np.isin(dst, dels)]
+    gained = [index.ids[index.reverse(x, y)] for x, y in zip(ix, iy)]
+    redo = np.unique(np.concatenate([iid, lost, *gained]))
+    redo = redo[~np.isin(redo, dels)]
+    keep = ~(np.isin(src, dels) | np.isin(src, redo))
+    parts = [{"src": src[keep], "dst": dst[keep], "dist": dist[keep], "rank": rank[keep]}]
+    if len(redo):
+        o = np.argsort(nid, kind="stable")
+        at = o[np.searchsorted(nid, redo, sorter=o)]
+        cols = index.knn(redo, nx[at], ny[at], None, k)
+        if cols is not None:
+            parts.append({"src": cols["qid"], "dst": cols["id"], "dist": cols["dist"], "rank": cols["rank"]})
+    return (
+        pa.table({"id": nid, "x": nx, "y": ny}, schema=POINTS_ARROW),
+        pa.table(
+            {c: np.concatenate([p[c] for p in parts]) for c in GRAPH_ARROW.names},
+            schema=GRAPH_ARROW,
+        ),
     )
 
 
 def apply_batch(
     state: IndexState,
-    inserts: DataFrame,
-    delete_ids: DataFrame,
+    inserts,
+    delete_ids,
     spec: GridSpec | None = None,
     cfg: EngineConfig | None = None,
     n_inserts: int | None = None,
@@ -96,6 +247,15 @@ def apply_batch(
                 reference reuses arena slots, index.rs:24-36, but ids
                 are caller-visible handles either way).
     delete_ids: (id) — must exist in the current point set.
+    Either may be a DataFrame, an Arrow table or a list of driver rows
+    (``(id, x, y)`` and ``(id,)`` tuples).
+
+    Small folds: when both frames of ``state`` have a registered driver
+    copy (see the module docstring) and the batch holds at most
+    ``knn._SMALL_BATCH`` ops, the fold runs on the driver and returns
+    local frames with registered copies; the ops cost at most one
+    collect job.  ``spec``, ``cfg``, ``extent`` and ``materialize`` only
+    steer the distributed plan, which every other batch takes.
     n_inserts / n_deletes: optional driver-known batch sizes; passing 0
                 lets the dead half of the repair be skipped without a
                 count job.
@@ -115,9 +275,30 @@ def apply_batch(
     through apply_ops_batches, which parquet-checkpoints every batch.
     """
     k = state.k
+    spark = state.points.sparkSession
+    pts_copy, graph_copy = registered_table(state.points), registered_table(state.graph)
+    if (
+        pts_copy is not None
+        and graph_copy is not None
+        and (n_inserts or 0) + (n_deletes or 0) <= _knn._SMALL_BATCH
+    ):
+        ops = _ops_on_driver(
+            None if n_inserts == 0 else inserts,
+            None if n_deletes == 0 else delete_ids,
+            _knn._SMALL_BATCH,
+        )
+        if ops is not None:
+            ins, dels = ops
+            n_inserts, n_deletes = ins.num_rows, len(dels)
+            if n_inserts == 0 and n_deletes == 0:
+                return state
+            if fits_resident(pts_copy.num_rows + n_inserts, graph_copy.num_rows + k * n_inserts):
+                return _local_state(spark, *_fold_on_driver(pts_copy, graph_copy, ins, dels, k), k)
+            # already collected: the distributed plan needs no count job
+            inserts, delete_ids = ins, pa.table({"id": dels})
     cfg = cfg or EngineConfig(k=k)
-    inserts = inserts.select("id", "x", "y")
-    delete_ids = delete_ids.select("id")
+    inserts = _as_frame(spark, inserts, POINTS_ARROW).select("id", "x", "y")
+    delete_ids = _as_frame(spark, delete_ids, _IDS_ARROW).select("id")
     if n_inserts is None:
         n_inserts = inserts.count()
     if n_deletes is None:
@@ -371,46 +552,53 @@ def apply_ops_batches(
     state: IndexState | None = None
     last_committed = -1
     resuming = True
-    for b in range(n_batches):
-        rows = (
-            sliced.filter(F.col("_batch") == b)
-            .orderBy("seq")
-            .select("seq", "op", "id", "x", "y")
-            .collect()
-        )
-        ins_rows, del_rows = fold_chunk(rows)
-        fp = ops_fingerprint(ins_rows, del_rows)
-        if resuming:
-            m = ckpt.read_manifest(b)
-            if m is not None and m.get("status") == "ok" and m.get("ops_fingerprint") == fp:
-                last_committed = b
-                continue  # committed with identical lineage: skip
-            resuming = False
-            if last_committed >= 0:
-                pts, g = ckpt.load(spark, last_committed)
-                state = IndexState(points=pts, graph=g, k=k)
-            else:
-                state = empty_state(spark, k)
-        t0 = _time.monotonic()
-        state = apply_batch(
-            state,
-            spark.createDataFrame(ins_rows or [], POINTS_SCHEMA),
-            spark.createDataFrame(del_rows or [], "id long"),
-            cfg=cfg,
-            n_inserts=len(ins_rows),
-            n_deletes=len(del_rows),
-            materialize=False,
-        )
-        pts, g = ckpt.write(
-            spark,
-            b,
-            state.points,
-            state.graph,
-            fp,
-            timings={"apply": round(_time.monotonic() - t0, 3)},
-            extra={"n_inserts": len(ins_rows), "n_deletes": len(del_rows)},
-        )
-        state = IndexState(points=pts, graph=g, k=k)
+    # the replay filters the stream once per batch: persist it so each
+    # filter reads the cached slice instead of re-deriving the stream
+    sliced = sliced.persist()
+    try:
+        for b in range(n_batches):
+            rows = (
+                sliced.filter(F.col("_batch") == b)
+                .orderBy("seq")
+                .select("seq", "op", "id", "x", "y")
+                .collect()
+            )
+            ins_rows, del_rows = fold_chunk(rows)
+            fp = ops_fingerprint(ins_rows, del_rows)
+            if resuming:
+                m = ckpt.read_manifest(b)
+                if m is not None and m.get("status") == "ok" and m.get("ops_fingerprint") == fp:
+                    last_committed = b
+                    continue  # committed with identical lineage: skip
+                resuming = False
+                if last_committed >= 0:
+                    pts, g = ckpt.load(spark, last_committed)
+                    state = IndexState(points=pts, graph=g, k=k)
+                else:
+                    state = empty_state(spark, k)
+            t0 = _time.monotonic()
+            # the rows are on the driver already: a small fold collects nothing
+            state = apply_batch(
+                state,
+                ins_rows,
+                del_rows,
+                cfg=cfg,
+                n_inserts=len(ins_rows),
+                n_deletes=len(del_rows),
+                materialize=False,
+            )
+            pts, g = ckpt.write(
+                spark,
+                b,
+                state.points,
+                state.graph,
+                fp,
+                timings={"apply": round(_time.monotonic() - t0, 3)},
+                extra={"n_inserts": len(ins_rows), "n_deletes": len(del_rows)},
+            )
+            state = IndexState(points=pts, graph=g, k=k)
+    finally:
+        sliced.unpersist()
     if state is None:  # every batch was already committed
         pts, g = ckpt.load(spark, last_committed)
         state = IndexState(points=pts, graph=g, k=k)

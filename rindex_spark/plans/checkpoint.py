@@ -15,17 +15,41 @@ This doubles as the fix for a driver-side pathology: chaining
 statistics (sizeInBytes products) generation over generation until plan
 analysis blows up.  A parquet round-trip gives each batch a fresh
 relation with real file statistics.
+
+A state whose frames carry registered driver copies (``knn``'s copy
+registry; see ``plans.batches``) is written on the driver: one snappy
+parquet file per table by pyarrow, graph rows ordered by (src, rank),
+into a temporary directory that then replaces ``batch=<n>``.  Any other
+state is written by Spark.  Either way the manifest's counts come from
+the written files (the tables, or the parquet footers), the state is read
+back with its known schema, and no job runs after the write.  A state
+within the driver byte budget comes back with registered copies, so the
+next small fold and small kNN batch on it need no job over the state.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
+import tempfile
 import time
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+
+from rindex_spark.operators.knn import (
+    drop_copies,
+    fits_resident,
+    register_copy,
+    registered_table,
+)
+from rindex_spark.plans.batches import GRAPH_ARROW, POINTS_ARROW
+
+_ARROW = (POINTS_ARROW, GRAPH_ARROW)
 
 
 def ops_fingerprint(ins_rows: list, del_rows: list) -> str:
@@ -41,14 +65,43 @@ def ops_fingerprint(ins_rows: list, del_rows: list) -> str:
     return h.hexdigest()[:16]
 
 
-def _partition_counts(df: DataFrame) -> list[int]:
-    return [
-        r["cnt"]
-        for r in df.groupBy(F.spark_partition_id().alias("pid"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy("pid")
-        .collect()
-    ]
+def _data_files(path: str) -> list[str]:
+    """The parquet files of a written table, in name (= partition) order;
+    Spark's and pyarrow's hidden files (``_SUCCESS``, ``.crc``) excluded."""
+    return sorted(
+        os.path.join(path, f)
+        for f in os.listdir(path)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    )
+
+
+def _file_rows(path: str) -> list[int]:
+    """Rows per written file, from the parquet footers (no job)."""
+    return [pq.read_metadata(f).num_rows for f in _data_files(path)]
+
+
+def _read_back(spark: SparkSession, path: str, schema=None) -> DataFrame:
+    """A frame over a written table with its schema given, so Spark runs
+    no inference job; the schema defaults to the first file's footer."""
+    if schema is None:
+        files = _data_files(path)
+        if not files:
+            return spark.read.parquet(path)
+        schema = from_arrow_schema(pq.read_schema(files[0]))
+    return spark.read.schema(schema).parquet(path)
+
+
+def _register_files(frames, paths, n_points: int, n_graph_rows: int, tables=None) -> None:
+    """Register driver copies of a written (points, graph) pair, when its
+    counts fit the budget and its columns are the state's.  ``tables``:
+    the pair as written; by default pyarrow reads the files back."""
+    if not fits_resident(n_points, n_graph_rows):
+        return
+    if any(sorted(f.columns) != sorted(s.names) for f, s in zip(frames, _ARROW)):
+        return
+    for i, (frame, path, schema) in enumerate(zip(frames, paths, _ARROW)):
+        table = tables[i] if tables is not None else pq.read_table(path, columns=schema.names)
+        register_copy(frame, table.cast(schema), path)
 
 
 @dataclass
@@ -72,21 +125,46 @@ class BatchCheckpointer:
         extra: dict | None = None,
     ) -> tuple[DataFrame, DataFrame]:
         """Materialize a batch's state; returns fresh parquet-backed
-        (points, graph) DataFrames with truncated lineage."""
+        (points, graph) DataFrames with truncated lineage.  Rewriting a
+        batch leaves only the new rows and drops the copies registered
+        for frames of the old files."""
         p = self.path(batch_id)
+        pp, gp = os.path.join(p, "points"), os.path.join(p, "graph")
+        pts_copy, graph_copy = registered_table(points), registered_table(graph)
+        drop_copies(p)
         t0 = time.monotonic()
-        points.write.mode("overwrite").parquet(os.path.join(p, "points"))
-        graph.write.mode("overwrite").parquet(os.path.join(p, "graph"))
+        tables = None
+        if pts_copy is not None and graph_copy is not None:
+            tables = (
+                pts_copy.select(POINTS_ARROW.names).cast(POINTS_ARROW),
+                graph_copy.select(GRAPH_ARROW.names)
+                .cast(GRAPH_ARROW)
+                .sort_by([("src", "ascending"), ("rank", "ascending")]),
+            )
+            self._write_tables(p, *tables)
+            points_rows, graph_rows = [tables[0].num_rows], [tables[1].num_rows]
+            schemas = [from_arrow_schema(t.schema) for t in tables]
+        else:
+            # an ok manifest must never describe a half-rewritten batch
+            try:
+                os.remove(self.manifest_path(batch_id))
+            except FileNotFoundError:
+                pass
+            points.write.mode("overwrite").parquet(pp)
+            graph.write.mode("overwrite").parquet(gp)
+            points_rows, graph_rows = _file_rows(pp), _file_rows(gp)
+            schemas = [points.schema, graph.schema]
         t_write = time.monotonic() - t0
-        pts = spark.read.parquet(os.path.join(p, "points"))
-        g = spark.read.parquet(os.path.join(p, "graph"))
+        pts, g = _read_back(spark, pp, schemas[0]), _read_back(spark, gp, schemas[1])
+        n_points, n_graph_rows = sum(points_rows), sum(graph_rows)
+        _register_files((pts, g), (pp, gp), n_points, n_graph_rows, tables)
         manifest = {
             "batch_id": batch_id,
             "ops_fingerprint": fingerprint,
-            "n_points": pts.count(),
-            "n_graph_rows": g.count(),
-            "points_rows_per_partition": _partition_counts(pts),
-            "graph_rows_per_partition": _partition_counts(g),
+            "n_points": n_points,
+            "n_graph_rows": n_graph_rows,
+            "points_rows_per_partition": points_rows,
+            "graph_rows_per_partition": graph_rows,
             "timings_sec": {**(timings or {}), "write": round(t_write, 3)},
             "status": "ok",
             **(extra or {}),
@@ -97,6 +175,24 @@ class BatchCheckpointer:
         os.replace(tmp, self.manifest_path(batch_id))  # atomic commit
         return pts, g
 
+    def _write_tables(self, p: str, points: pa.Table, graph: pa.Table) -> None:
+        """Write both tables into a fresh directory, then swap it in for
+        ``p``: the old batch directory, whoever wrote it, goes whole."""
+        os.makedirs(self.base_dir, exist_ok=True)
+        # a leading dot keeps the temporary out of latest_ok_epoch and
+        # Spark's file listings
+        tmp = tempfile.mkdtemp(prefix=f".{os.path.basename(p)}.", dir=self.base_dir)
+        for name, table in (("points", points), ("graph", graph)):
+            os.mkdir(os.path.join(tmp, name))
+            pq.write_table(table, os.path.join(tmp, name, "part-00000.snappy.parquet"), compression="snappy")
+        old = None
+        if os.path.exists(p):
+            old = tmp + ".old"
+            os.rename(p, old)
+        os.rename(tmp, p)
+        if old is not None:
+            shutil.rmtree(old, ignore_errors=True)
+
     def read_manifest(self, batch_id: int) -> dict | None:
         try:
             with open(self.manifest_path(batch_id)) as f:
@@ -105,11 +201,15 @@ class BatchCheckpointer:
             return None
 
     def load(self, spark: SparkSession, batch_id: int) -> tuple[DataFrame, DataFrame]:
+        """A committed state, read with its files' schema; it comes with
+        registered driver copies when the manifest's counts fit."""
         p = self.path(batch_id)
-        return (
-            spark.read.parquet(os.path.join(p, "points")),
-            spark.read.parquet(os.path.join(p, "graph")),
-        )
+        paths = (os.path.join(p, "points"), os.path.join(p, "graph"))
+        frames = tuple(_read_back(spark, q) for q in paths)
+        m = self.read_manifest(batch_id)
+        if m is not None and "n_points" in m and "n_graph_rows" in m:
+            _register_files(frames, paths, m["n_points"], m["n_graph_rows"])
+        return frames
 
     def latest_ok_epoch(self) -> int | None:
         """Highest batch/epoch id with a committed (status ok) manifest,

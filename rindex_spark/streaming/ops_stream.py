@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 
 from rindex_spark.config import EngineConfig
 from rindex_spark.plans.batches import (
-    POINTS_SCHEMA,
     IndexState,
     apply_batch,
     empty_state,
@@ -99,8 +98,8 @@ def stream_ops(
             )
         state = apply_batch(
             holder["state"],
-            spark.createDataFrame(ins_rows or [], POINTS_SCHEMA),
-            spark.createDataFrame(del_rows or [], "id long"),
+            ins_rows,
+            del_rows,
             cfg=cfg,
             n_inserts=len(ins_rows),
             n_deletes=len(del_rows),

@@ -21,6 +21,20 @@ def spark():
     s.stop()
 
 
+def count_jobs(spark, fn):
+    """Run fn; return (its result, [per Spark job it started: the task
+    counts of the job's stages]).  ``len`` of the list is the job count."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    out = fn()
+    new = sorted(set(tracker.getJobIdsForGroup(None)) - before)
+    tasks = []
+    for j in new:
+        info = tracker.getJobInfo(j)
+        tasks.append([tracker.getStageInfo(s).numTasks for s in info.stageIds])
+    return out, tasks
+
+
 def brute_knn(coords: np.ndarray, ids: np.ndarray, k: int):
     """Brute-force kNN oracle INCLUDING self at distance 0 — mirrors the
     reference's BruteForceNeighbors oracle (lib/tests/graph.rs:75-174).

@@ -25,7 +25,7 @@ from rindex_spark.operators.range_query import range_join
 from rindex_spark.operators.rknn import reverse_knn
 from rindex_spark.operators.stats import knn_dist
 
-from tests.conftest import brute_knn
+from tests.conftest import brute_knn, count_jobs
 
 
 def make_points(spark, coords, ids=None):
@@ -251,11 +251,8 @@ def test_range_join_extent_param_zero_jobs_same_result(spark):
         [(0, 0.0, 0.0, 10.0), (1, 20.0, -20.0, 500.0)],
         "qid long, x double, y double, radius double",
     )
-    tracker = spark.sparkContext.statusTracker()
-    before = len(tracker.getJobIdsForGroup(None))
-    res = range_join(pts, q, spec=spec, extent=extent)  # construction only
-    after = len(tracker.getJobIdsForGroup(None))
-    assert after == before, "extent= path must not launch driver jobs"
+    res, jobs = count_jobs(spark, lambda: range_join(pts, q, spec=spec, extent=extent))
+    assert not jobs, "extent= path must not launch driver jobs"
     got = sorted((r["qid"], r["id"]) for r in res.collect())
     legacy = sorted(
         (r["qid"], r["id"]) for r in range_join(pts, q, spec=spec).collect()
@@ -415,11 +412,8 @@ def test_rknn_stats_handle_no_driver_jobs_and_identical(spark):
         "qid long, x double, y double",
     )
     st = rknn_stats(pts, g, k, spec)
-    tracker = spark.sparkContext.statusTracker()
-    before = len(tracker.getJobIdsForGroup(None))
-    res = reverse_knn(pts, g, q, k, spec, stats=st)  # construction only
-    after = len(tracker.getJobIdsForGroup(None))
-    assert after == before, "stats= path must not launch driver jobs"
+    res, jobs = count_jobs(spark, lambda: reverse_knn(pts, g, q, k, spec, stats=st))
+    assert not jobs, "stats= path must not launch driver jobs"
     got = sorted((r["qid"], r["id"]) for r in res.collect())
     legacy = sorted(
         (r["qid"], r["id"]) for r in reverse_knn(pts, g, q, k, spec).collect()

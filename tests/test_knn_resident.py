@@ -23,7 +23,7 @@ from pyspark.sql import Row
 from rindex_spark.operators import knn as knn_mod
 from rindex_spark.operators.knn import knn_for_queries
 
-from tests.conftest import brute_knn_queries
+from tests.conftest import brute_knn_queries, count_jobs
 
 
 def _points(spark, xy, ids=None, extra=None):
@@ -139,19 +139,6 @@ def test_resident_edge_cases(spark, monkeypatch):
     assert _both_paths(monkeypatch, pts, noq, 3) == ([], [])
 
 
-def _jobs(spark, fn):
-    """Run fn; return (result, [per new job: its stages' task counts])."""
-    tracker = spark.sparkContext.statusTracker()
-    before = set(tracker.getJobIdsForGroup(None))
-    out = fn()
-    new = sorted(set(tracker.getJobIdsForGroup(None)) - before)
-    tasks = []
-    for j in new:
-        info = tracker.getJobInfo(j)
-        tasks.append([tracker.getStageInfo(s).numTasks for s in info.stageIds])
-    return out, tasks
-
-
 def test_resident_jobs_per_call(spark):
     """On an already-resident persisted frame a 16-query call, with its
     collect, runs at most 2 jobs, and none of them scans the points.
@@ -171,11 +158,11 @@ def test_resident_jobs_per_call(spark):
     def call(q):
         return knn_for_queries(pts, q, 5, extent=ext).collect()
 
-    _, first = _jobs(spark, lambda: call(local_q))
+    _, first = count_jobs(spark, lambda: call(local_q))
     assert any(7 in stages for stages in first), first
     dist_qxy = np.array([(i * 3.0 - 20.0, 20.0 - i * 2.0) for i in range(16)])
     for q, q_xy in ((local_q, qxy), (dist_q, dist_qxy)):
-        rows, jobs = _jobs(spark, lambda: call(q))
+        rows, jobs = count_jobs(spark, lambda: call(q))
         assert len(jobs) <= 2, jobs
         assert not any(7 in stages for stages in jobs), jobs
         got = [(r["qid"], r["id"], r["dist"], r["rank"]) for r in rows]

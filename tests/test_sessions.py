@@ -10,6 +10,8 @@ from pyspark.sql import functions as F
 
 from rindex_spark.operators.sessions import session_stats, sessionize
 
+from tests.conftest import count_jobs
+
 T0 = dt.datetime(2024, 1, 1, 0, 0, 0)
 
 
@@ -182,11 +184,8 @@ def test_interval_join_explicit_width_no_driver_jobs(spark):
         ],
         "iid long, t_start timestamp, t_end timestamp",
     )
-    tracker = spark.sparkContext.statusTracker()
-    before = len(tracker.getJobIdsForGroup(None))
-    res = interval_join(ev, iv, bucket_width_sec=10.0)  # construction only
-    after = len(tracker.getJobIdsForGroup(None))
-    assert after == before, "explicit-width path must not launch driver jobs"
+    res, jobs = count_jobs(spark, lambda: interval_join(ev, iv, bucket_width_sec=10.0))
+    assert not jobs, "explicit-width path must not launch driver jobs"
     got = {(r["iid"], r["event_id"]) for r in res.collect()}
     want = {(100, i) for i in range(5, 16)} | {(101, i) for i in range(30, 46)}
     assert got == want
