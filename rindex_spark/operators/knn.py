@@ -773,8 +773,9 @@ def _unpack_best(batches):
 # hot queries from a compact cell-ordered structure).
 
 # A point set whose (id, x, y, *extra_cols) values fit this many bytes
-# (8 per value: 48 MiB ~ 2.1M 2-D points) is small enough to hold on the
-# driver.  Known from the extent's n, so the gate costs no job.
+# (8 per value: 48 MiB ~ 2.1M 2-D points; a committed state's graph rows
+# count too, see resident_bytes) is small enough to hold on the driver.
+# Known from the extent's n, so the gate costs no job.
 _RESIDENT_MAX_BYTES = 48 << 20
 # A query batch of at most this many rows is "small": knn_for_queries
 # answers it from a resident copy, and the ring loop always hands a
@@ -1092,15 +1093,20 @@ def _cache_token(points: DataFrame):
 # dropped with its frame, or when the files under its path are rewritten.
 _registered = weakref.WeakKeyDictionary()
 
-# bytes per point row (id, x, y) and per graph row (src, dst, dist, rank)
-# of a registered state, counted against _RESIDENT_MAX_BYTES
-_POINT_BYTES = 24
+# bytes per graph row (src, dst, dist, rank) of a registered state
 _GRAPH_ROW_BYTES = 28
 
 
-def fits_resident(n_points: int, n_graph_rows: int) -> bool:
-    """Whether a state of this size may be held on the driver."""
-    return n_points * _POINT_BYTES + n_graph_rows * _GRAPH_ROW_BYTES <= _RESIDENT_MAX_BYTES
+def resident_bytes(n_points: int, n_graph_rows: int = 0, n_extra: int = 0) -> int:
+    """Driver bytes of ``n_points`` rows (id, x, y, ``n_extra`` extra
+    columns: 8 bytes a value) and ``n_graph_rows`` kNN-graph rows."""
+    return n_points * 8 * (3 + n_extra) + n_graph_rows * _GRAPH_ROW_BYTES
+
+
+def fits_resident(n_points: int, n_graph_rows: int = 0, n_extra: int = 0) -> bool:
+    """Whether such a point set (and graph) may be held on the driver:
+    the one test of ``_RESIDENT_MAX_BYTES``."""
+    return resident_bytes(n_points, n_graph_rows, n_extra) <= _RESIDENT_MAX_BYTES
 
 
 class _Copy:
@@ -1162,22 +1168,20 @@ def _resident_index(points: DataFrame, extra_cols: tuple) -> _ResidentIndex:
 
 
 def _collect_queries(queries: DataFrame, extra_cols: tuple, limit: int):
-    """The rows (qid, x, y, *extra_cols) of ``queries`` as an Arrow table:
-    at most ``limit`` of a distributed frame, in one job — toArrow, since
-    collecting a limit scans partitions in growing waves, a job each.  A
-    local frame (e.g. createDataFrame of driver data) is collected whole
-    with no job: its rows are on the driver already, and a select or
-    limit on it costs more plan analysis than collecting them (~10 ms
-    against ~5 ms for 16 rows, ~30 ms against ~20 ms for 2,000)."""
+    """At most ``limit`` rows (qid, x, y, *extra_cols) of ``queries`` as
+    an Arrow table.  A local frame (e.g. createDataFrame of driver data)
+    is collected without a job; any other in one job — toArrow, since
+    collecting a limit scans partitions in growing waves, a job each."""
     import pyarrow as pa
 
     cols = ("qid", "x", "y", *extra_cols)
+    q = queries.select(*cols).limit(limit)
     if not queries.isLocal():
-        return queries.select(*cols).limit(limit).toArrow()
-    rows = queries.collect()
+        return q.toArrow()
+    rows = q.collect()
     return pa.table(
         {
-            c: pa.array([r[c] for r in rows], pa.int64() if i == 0 else pa.float64())
+            c: pa.array([r[i] for r in rows], pa.int64() if i == 0 else pa.float64())
             for i, c in enumerate(cols)
         }
     )
@@ -1258,8 +1262,8 @@ def knn_for_queries(
     from the extent's n, no job) and the queries are external
     (``queries_within_extent=False``), one query-scale job collects at
     most ``_SMALL_BATCH`` + 1 query rows (a driver-local query frame
-    needs no job and is collected whole); it replaces the ring path's
-    query-extent aggregate for small batches.  A batch of at most ``_SMALL_BATCH`` (512)
+    needs no job); it replaces the ring path's query-extent aggregate
+    for small batches.  A batch of at most ``_SMALL_BATCH`` (512)
     queries is then answered exactly on the driver from a cell-sorted
     numpy copy of the points (``_ResidentIndex``, the brute tail's
     kernel, bit-identical rows) and returned as a local DataFrame: no
@@ -1304,7 +1308,7 @@ def knn_for_queries(
     if not ext["n"]:
         _record_stats(0, 0, 0, 0)
         return spark.createDataFrame([], _OUT_SCHEMA)
-    if not queries_within_extent and ext["n"] * 8 * (3 + n_extra) <= _RESIDENT_MAX_BYTES:
+    if not queries_within_extent and fits_resident(ext["n"], n_extra=n_extra):
         qtbl = _collect_queries(queries, extra_cols, _SMALL_BATCH + 1)
         if qtbl.num_rows <= _SMALL_BATCH:
             return _resident_knn(points, qtbl, k, extra_cols)

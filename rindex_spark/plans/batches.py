@@ -36,19 +36,22 @@ mirroring lib/tests/random.rs / graph.rs).  Within one batch, an
 insert-then-delete of the same id cancels out before the fold.
 
 Small folds run on the driver.  A state that fits the resident byte
-budget (``knn._RESIDENT_MAX_BYTES``: 24 B per point plus 28 B per graph
-row) carries a driver copy, an Arrow table per frame registered in
-``knn``'s copy registry by ``empty_state``, by the driver fold and by
-``BatchCheckpointer.write``/``load``.  A batch of at most
-``knn._SMALL_BATCH`` ops on such a state is folded on that copy with the
-same affected set, computed in numpy (losers by ``np.isin``, gainers by
-``_ResidentIndex.reverse``, every affected point recomputed by
-``_ResidentIndex.knn``, the ring path's kernel and tie-break, so rows are
-bit-identical), and returns local frames with no Spark job; collecting
-ops from frames that are not driver-local costs one job.  Bulk batches
-and larger states keep the distributed plan above, in which the driver
-holds only op counts.  Insert-only and delete-only batches skip the dead
-half of the repair (the common case in streaming ingest).
+budget (``knn.fits_resident``: 24 B per point plus 28 B per graph row
+against ``knn._RESIDENT_MAX_BYTES``) carries a driver copy, an Arrow
+table per frame registered in ``knn``'s copy registry by
+``empty_state``, by the driver fold and by ``BatchCheckpointer.write``/
+``load``.  A batch on such a state whose ops (as point rows) fit what
+the state leaves of the budget, and whose folded state fits it too, is
+folded on that copy with the same affected set, computed in numpy
+(losers by ``np.isin``, gainers by ``_ResidentIndex.reverse``, every
+affected point recomputed by ``_ResidentIndex.knn``, the ring path's
+kernel and tie-break, so rows are bit-identical), and returns local
+frames with no Spark job; collecting ops from frames that are not
+driver-local costs one job.  An affected set of more than
+``_DRIVER_MAX_REDO`` points (a bulk batch: the driver recomputes on one
+core) and over-budget states keep the distributed plan above, in which
+the driver holds only op counts.  Insert-only and delete-only batches
+skip the dead half of the repair (the common case in streaming ingest).
 """
 
 from __future__ import annotations
@@ -74,6 +77,7 @@ from rindex_spark.operators.knn import (
     knn_for_queries,
     register_copy,
     registered_table,
+    resident_bytes,
 )
 from rindex_spark.operators.rknn import reverse_knn
 
@@ -82,6 +86,14 @@ GRAPH_ARROW = pa.schema(
     [("src", pa.int64()), ("dst", pa.int64()), ("dist", pa.float64()), ("rank", pa.int32())]
 )
 _IDS_ARROW = pa.schema([("id", pa.int64())])
+# Most points a driver fold recomputes; a larger affected set takes the
+# distributed fold.  The driver recomputes ~0.25-0.4 ms a point on one
+# core, while a distributed fold plus commit costs ~12-17 s at local[2]
+# whatever the batch.  Folds plus commits into 100k points at k = 10, on
+# 4 vCPU: 5,000 ops (~38k recomputed) 11.9 s driver against 16.6 s
+# distributed, 7,000 ops (~47k) 15.0 s against 15.3 s, 10,000 ops (~61k)
+# 21.6 s against 17.1 s.  The bound sits below that ~47k crossover.
+_DRIVER_MAX_REDO = 30_000
 
 
 @dataclass
@@ -174,9 +186,12 @@ def _as_frame(spark, ops, schema: pa.Schema) -> DataFrame:
     return _frame(spark, ops.select(schema.names).cast(schema))
 
 
-def _fold_on_driver(points: pa.Table, graph: pa.Table, ins: pa.Table, dels: np.ndarray, k: int):
+def _fold_on_driver(
+    points: pa.Table, graph: pa.Table, ins: pa.Table, dels: np.ndarray, k: int, max_redo: int
+):
     """apply_batch's repair on driver copies; returns the folded (points,
-    graph) tables.  The affected set is the distributed plan's: inserts,
+    graph) tables, or None when more than ``max_redo`` points would be
+    recomputed.  The affected set is the distributed plan's: inserts,
     losers (``src`` of a row whose ``dst`` is deleted) and gainers
     (survivors p with dist(p, insert) <= p's k-th distance, inclusive;
     inf below k rows).  Every affected point is recomputed on the folded
@@ -191,6 +206,11 @@ def _fold_on_driver(points: pa.Table, graph: pa.Table, ins: pa.Table, dels: np.n
     dist, rank = col(graph, "dist", np.float64), col(graph, "rank", np.int64)
     iid, ix, iy = col(ins, "id", np.int64), col(ins, "x", np.float64), col(ins, "y", np.float64)
     alive = ~np.isin(pid, dels)
+    # inserts and losers, checked before the gainers' per-insert scan
+    redo = np.union1d(iid, src[np.isin(dst, dels)])
+    redo = redo[~np.isin(redo, dels)]
+    if len(redo) > max_redo:
+        return None
 
     # each point's k-th neighbour distance: its rank-k row's, inf when it
     # has fewer than k rows
@@ -209,10 +229,10 @@ def _fold_on_driver(points: pa.Table, graph: pa.Table, ins: pa.Table, dels: np.n
     index = _ResidentIndex(
         nid, nx, ny, None, (), knn_dist=np.concatenate([kd[alive], np.full(len(iid), -np.inf)])
     )
-    lost = src[np.isin(dst, dels)]
     gained = [index.ids[index.reverse(x, y)] for x, y in zip(ix, iy)]
-    redo = np.unique(np.concatenate([iid, lost, *gained]))
-    redo = redo[~np.isin(redo, dels)]
+    redo = np.unique(np.concatenate([redo, *gained]))
+    if len(redo) > max_redo:
+        return None
     keep = ~(np.isin(src, dels) | np.isin(src, redo))
     parts = [{"src": src[keep], "dst": dst[keep], "dist": dist[keep], "rank": rank[keep]}]
     if len(redo):
@@ -250,12 +270,13 @@ def apply_batch(
     Either may be a DataFrame, an Arrow table or a list of driver rows
     (``(id, x, y)`` and ``(id,)`` tuples).
 
-    Small folds: when both frames of ``state`` have a registered driver
-    copy (see the module docstring) and the batch holds at most
-    ``knn._SMALL_BATCH`` ops, the fold runs on the driver and returns
-    local frames with registered copies; the ops cost at most one
-    collect job.  ``spec``, ``cfg``, ``extent`` and ``materialize`` only
-    steer the distributed plan, which every other batch takes.
+    Driver folds: when both frames of ``state`` have a registered driver
+    copy (see the module docstring), its ops and the folded state fit
+    the resident byte budget, and at most ``_DRIVER_MAX_REDO`` points
+    are recomputed, the fold runs on the driver and returns local frames
+    with registered copies; the ops cost at most one collect job.
+    ``spec``, ``cfg``, ``extent`` and ``materialize`` only steer the
+    distributed plan, which every other batch takes.
     n_inserts / n_deletes: optional driver-known batch sizes; passing 0
                 lets the dead half of the repair be skipped without a
                 count job.
@@ -277,15 +298,16 @@ def apply_batch(
     k = state.k
     spark = state.points.sparkSession
     pts_copy, graph_copy = registered_table(state.points), registered_table(state.graph)
-    if (
-        pts_copy is not None
-        and graph_copy is not None
-        and (n_inserts or 0) + (n_deletes or 0) <= _knn._SMALL_BATCH
-    ):
+    # the ops, held as point rows, get what the state leaves of the budget
+    limit = 0
+    if pts_copy is not None and graph_copy is not None:
+        room = _knn._RESIDENT_MAX_BYTES - resident_bytes(pts_copy.num_rows, graph_copy.num_rows)
+        limit = room // resident_bytes(1)
+    if 0 < limit and (n_inserts or 0) + (n_deletes or 0) <= limit:
         ops = _ops_on_driver(
             None if n_inserts == 0 else inserts,
             None if n_deletes == 0 else delete_ids,
-            _knn._SMALL_BATCH,
+            limit,
         )
         if ops is not None:
             ins, dels = ops
@@ -293,7 +315,9 @@ def apply_batch(
             if n_inserts == 0 and n_deletes == 0:
                 return state
             if fits_resident(pts_copy.num_rows + n_inserts, graph_copy.num_rows + k * n_inserts):
-                return _local_state(spark, *_fold_on_driver(pts_copy, graph_copy, ins, dels, k), k)
+                folded = _fold_on_driver(pts_copy, graph_copy, ins, dels, k, _DRIVER_MAX_REDO)
+                if folded is not None:
+                    return _local_state(spark, *folded, k)
             # already collected: the distributed plan needs no count job
             inserts, delete_ids = ins, pa.table({"id": dels})
     cfg = cfg or EngineConfig(k=k)

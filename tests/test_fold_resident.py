@@ -5,6 +5,9 @@
   after batch: ties from duplicate coordinates, insert-only and
   delete-only batches, deletes nobody held as a neighbour, deleting
   everything then reinserting, and k >= n;
+* gate — a batch of any size folds on the driver while the budget holds
+  it, and one that would recompute more than ``_DRIVER_MAX_REDO`` points
+  takes the distributed fold, with the same rows;
 * jobs — a 20-op fold plus its commit on a committed 2,000-point state
   runs at most one Spark job, and a small kNN batch on the committed
   state runs none before the caller's collect;
@@ -24,6 +27,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from rindex_spark.operators import knn as knn_mod
+from rindex_spark.plans import batches as batches_mod
 from rindex_spark.operators.knn import knn_for_queries, register_copy, registered_table
 from rindex_spark.plans.batches import IndexState, apply_batch, empty_state
 from rindex_spark.plans.checkpoint import BatchCheckpointer
@@ -102,6 +106,38 @@ def test_driver_fold_k_at_least_n(spark):
         ([], [0, 1]),
     ]
     _assert_parity(spark, batches, k=8)
+
+
+def test_driver_fold_gate_is_budget_and_recompute_bound(spark, monkeypatch):
+    """600 inserts (more than a small kNN batch) fold on the driver.
+    Under a bound of 599 recomputed points the same batch is refused
+    before the gainer scan; under a bound of 1 a single insert is
+    refused after it, since the insert's gainers pass the bound.  Both
+    fall back to the distributed fold, which gives the same rows."""
+    rng = np.random.default_rng(5)
+    ins = [(i, float(x), float(y)) for i, (x, y) in enumerate(rng.random((600, 2)))]
+    one = [(1000, 0.5, 0.5)]
+
+    def fold(state, rows):
+        new = apply_batch(
+            state, spark.createDataFrame(rows, "id long, x double, y double"), [],
+            n_inserts=len(rows), n_deletes=0,
+        )
+        return new, registered_table(new.graph) is not None
+
+    state, on_driver = fold(empty_state(spark, 5), ins)
+    assert on_driver
+    want, on_driver = fold(state, one)
+    assert on_driver
+    monkeypatch.setattr(batches_mod, "_DRIVER_MAX_REDO", 599)
+    bounded, on_driver = fold(empty_state(spark, 5), ins)
+    assert not on_driver
+    assert _sorted_rows(bounded.graph) == _sorted_rows(state.graph)
+    monkeypatch.setattr(batches_mod, "_DRIVER_MAX_REDO", 1)
+    got, on_driver = fold(state, one)
+    assert not on_driver
+    assert _sorted_rows(got.graph) == _sorted_rows(want.graph)
+    assert _sorted_rows(got.points) == _sorted_rows(want.points)
 
 
 def _brute_graph(ids, xy, k):
