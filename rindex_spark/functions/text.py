@@ -126,21 +126,24 @@ def lang_id_series(text: pd.Series) -> pd.Series:
 _BPE_TOKEN_RE = r"[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]"
 
 
-def with_text_stats(df, text_col: str = "text"):
+def with_text_stats(df, text_col: str = "text", spread: bool = True):
     """Adds n_chars_calc, n_tokens, n_tokens_bpe, alpha_ratio,
     digit_ratio, punct_ratio, avg_token_len, quality_score — all
     built-in functions, whole-stage codegen.
 
-    r6 round 3: the input is spread to session parallelism FIRST
-    (metadata-only guard; a no-op on at-scale inputs) — the stats
+    r6 round 3: by default the input is spread to session parallelism
+    FIRST (metadata-only guard; a no-op on at-scale inputs) — the stats
     expressions are the expensive part of this lineage, and a few-MB
     cached corpus otherwise computes them on its 1-2 cache partitions
     no matter what a DOWNSTREAM spread does (the regex work sits below
     that exchange; measured 2.2s on 2 of 32 cores feeding
-    sample_to_token_budget at 50k docs)."""
-    from rindex_spark.plans.scan import spread_scan
+    sample_to_token_budget at 50k docs).  ``spread=False`` makes this a
+    pure projection: no planning, and the input's partitioning and row
+    order are kept, for callers that lay out their data themselves."""
+    if spread:
+        from rindex_spark.plans.scan import spread_scan
 
-    df = spread_scan(df)
+        df = spread_scan(df)
     t = F.col(text_col)
     n_chars = F.length(t)
     # character-CLASS counts via translate, not regexp_replace (r6,

@@ -603,7 +603,16 @@ def embedding_near_dup(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """Near-duplicate pairs (a < b) with cosine >= threshold, via LSH
-    buckets + exact refine.  returns (id_a, id_b, score)."""
+    buckets + exact refine.  returns (id_a, id_b, score).
+
+    The candidate-pair stream that feeds the refine gets the larger of
+    the session's default parallelism and the corpus's partition count
+    (metadata, no job), so the refine grows with the input instead of
+    staying at core count."""
+    refine_partitions = max(
+        corpus.sparkSession.sparkContext.defaultParallelism,
+        corpus.rdd.getNumPartitions(),
+    )
     c0 = corpus.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("_v"))
     # all tables' signatures in ONE corpus pass (r6); null/ragged rows
     # carry sentinel buckets and are dropped — they can't near-dup
@@ -623,10 +632,11 @@ def embedding_near_dup(
         # but the stage it feeds (vector joins + pair_cosine refine) is
         # CPU-heavy per byte — a few-MB pair list collapsed to 4 of 32
         # cores (refine stage 0.8-1.5s wall at 20k pairs).  A fixed-
-        # count repartition of the 16 B/pair id stream is the cheapest
-        # way to pin the refine at cluster parallelism; at web scale it
-        # lays the pair stream out in one uniform wave.
-        .repartition(corpus.sparkSession.sparkContext.defaultParallelism)
+        # count repartition of the 16 B/pair id stream keeps the refine
+        # at least at cluster parallelism; a corpus read in more splits
+        # than cores spreads it wider, so a dense-bucket pair stream is
+        # not squeezed into core-count tasks.
+        .repartition(refine_partitions)
     )
     scored = (
         cand.join(

@@ -55,6 +55,7 @@ import os
 import threading
 import time as _time
 import weakref
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -561,7 +562,7 @@ def _knn_scan(qx, qy, qe, kth_ub, px, py, pid, pe, k, best_d, best_i, chunk=128)
 
     The one exact kNN kernel of the scan paths: the Spark brute tail
     calls it once per Arrow batch of a partition, the resident serving
-    path once per query with the points of its candidate cells.
+    path once per query group with the points of its candidate cells.
 
     qe / pe: (n, D-2) extra coordinate columns or None.  kth_ub: a per
     -query UPPER bound on its true k-th distance (inf = none).  Queries
@@ -767,24 +768,64 @@ def _unpack_best(batches):
 
 
 # --------------------------------------------------------------------------
-# Resident serving path: small query batches answered on the driver from
-# a cell-sorted copy of the points, with no ring round and no Spark job
+# Resident serving path: query batches answered on the driver from a
+# cell-sorted copy of the points, with no ring round and no Spark job
 # over the points once the copy is held (GeoBlocks, EDBT 2021: answer
-# hot queries from a compact cell-ordered structure).
+# queries from a compact cell-ordered structure; Cache-Efficient Top-k
+# Aggregation, VLDB 2023: one candidate gather and top-k merge per cell
+# group instead of per query).
 
 # A point set whose (id, x, y, *extra_cols) values fit this many bytes
 # (8 per value: 48 MiB ~ 2.1M 2-D points; a committed state's graph rows
 # count too, see resident_bytes) is small enough to hold on the driver.
 # Known from the extent's n, so the gate costs no job.
 _RESIDENT_MAX_BYTES = 48 << 20
-# A query batch of at most this many rows is "small": knn_for_queries
-# answers it from a resident copy, and the ring loop always hands a
-# straggler set of at most this size to the brute tail, whatever its
-# flop gate says.
+# Most kNN queries one call answers on the driver, whether a query batch
+# (knn_for_queries) or the points a driver fold recomputes (plans.
+# batches); larger sets take the distributed plans, which use every
+# core.  Measured with the batched kernel on 4 vCPU at local[2], k = 10,
+# 100k uniform points, driver against distributed:
+#   apply_batch + BatchCheckpointer.write, ops (points recomputed):
+#     1,000 (9.4k) 1.9 s / 13.7 s; 3,000 (25.7k) 2.6 / 11.6;
+#     5,000 (39.1k) 3.5 / 25.0; 7,000 (50.6k) 3.5 / 15.6;
+#     10,000 (65.0k) 4.3 / 13.5; 20,000 (94.2k) 3.9 / 14.0;
+#     40,000 (120.4k) 5.3 / 16.7;
+#   knn_for_queries + toArrow, queries: 10k 1.2 / 13.9;
+#     50k 4.5 / 8.5; 100k 8.1 / 10.9; 200k 8.3 / 15.9.
+# The driver won at every size, so no crossover was found at this scale;
+# the bound is the largest size measured.  A fold's recompute set cannot
+# outgrow its state, which the byte budget caps near 165k points at
+# k = 10, so for folds the budget is the binding limit.
+_DRIVER_MAX_REDO = 200_000
+# The ring loop always hands a straggler set of at most this many
+# queries to the brute tail, whatever its flop gate says.
 _SMALL_BATCH = 512
 # mean points per resident CSR cell: cells only seed each query's
 # k-th-distance bound and gather its candidates, so they stay small
 _RESIDENT_PER_CELL = 8
+# The batched kernels group queries by an aligned square of cells: the
+# largest, up to 2^_GROUP_LEVELS cells a side, that holds at most
+# _GROUP_POINTS points.  A group shares one candidate gather and one
+# _knn_scan call, and its candidate set stays near its neighbourhood:
+# dense cells form groups of their own, sparse regions pool many cells.
+# Swept over 64-1024 points and 3-5 levels (2,000 and 16 queries on 5k
+# clustered points, 10k on 100k uniform, 5k on 200k clustered): 256 and
+# 4 were best or within noise of it everywhere; the worst settings cost
+# up to 1.7x.
+_GROUP_POINTS = 256
+_GROUP_LEVELS = 4
+# distance-matrix elements per block of a batched pass (32 MiB of f64)
+_BLOCK = 1 << 22
+
+
+def _clip_cell(f: float, n: int) -> int:
+    """floor(f) clipped to [0, n - 1]: ``_ResidentIndex._ix`` for one
+    value (NaN and -inf give 0, +inf gives n - 1)."""
+    if not f > 0.0:
+        return 0
+    if f >= n - 1:
+        return n - 1
+    return int(f)
 
 
 class _ResidentIndex:
@@ -794,23 +835,31 @@ class _ResidentIndex:
     that the kernel's stable sort merges cheaply), CSR offsets per cell,
     and a summed-area table of cell counts.
 
-    ``knn`` answers a query batch exactly with ``_knn_scan``, the brute
-    tail's kernel.  The cells only bound each query's k-th distance and
-    select its candidates, so a query's cost stays near its
-    neighbourhood instead of n:
+    Every query method is batched: the queries are grouped by an aligned
+    square of cells (``_groups``), and each group shares one candidate
+    gather and one distance pass.  Within a group every query keeps its
+    own bound or radius, so the cells only select candidates and the
+    answers are exact and independent of the grouping.
 
-    1. expand Chebyshev rings around the query's (clamped) cell until
-       the block holds >= k points (counted in O(1) from the summed-area
-       table), and take the k-th distance among those points;
-    2. in 2-D, tighten that bound to the smallest cell-farthest-corner
-       distance that covers k points: every point of those cells lies
-       within it, so it is within one cell diagonal of the true k-th
-       distance even where step 1's square block overshoots by ~sqrt(2)
-       next to a dense cluster;
+    ``knn`` answers a kNN batch with ``_knn_scan``, the brute tail's
+    kernel, so rows are bit-identical to the ring path.  Per group:
+
+    1. expand Chebyshev rings around the group's cells until the block
+       holds >= k points (counted in O(1) from the summed-area table);
+       each query's k-th distance among those points bounds its own;
+    2. in 2-D, tighten the bounds to the smallest distance from the
+       group's query box to the farthest corner of a set of cells
+       covering k points: every point of those cells lies within it, so
+       it holds where step 1's square block overshoots by ~sqrt(2) next
+       to a dense cluster;
     3. the candidates are the points of the cells whose nearest edge is
-       within the bound, and the bound turns on the kernel's box prune.
+       within the largest bound of the group's query box, and each
+       query's bound turns on the kernel's box prune.
 
-    ``knn_dist`` (optional, 2-D): each point's current k-th neighbour
+    ``within`` answers radius queries and ``reverse`` reverse-kNN queries
+    with the distance of ``euclidean_nd`` and inclusive ``<=`` tests.
+
+    ``knn_dist`` (optional): each point's current k-th neighbour
     distance (inf below k neighbours, -inf for a point that holds no
     ball); it turns on ``reverse``, pruned by the per-cell maximum."""
 
@@ -818,9 +867,11 @@ class _ResidentIndex:
         self.extra_cols = extra_cols
         n = self.n = len(ids)
         if n == 0:
+            self.ids = ids
             return
         self.x0, self.y0 = float(xs.min()), float(ys.min())
         ex, ey = float(xs.max()) - self.x0, float(ys.max()) - self.y0
+        self.x1, self.y1 = self.x0 + ex, self.y0 + ey
         t = _RESIDENT_PER_CELL
         # grid.grid_from_extent's sizing: ~n/t cells, per-axis floors
         # keep near-1-D data from becoming a line of n cells
@@ -861,10 +912,11 @@ class _ResidentIndex:
         return cls.from_table(points.select(*cols).toArrow(), extra_cols)
 
     @classmethod
-    def from_table(cls, tbl, extra_cols: tuple) -> "_ResidentIndex":
-        """Index of an Arrow table's (id, x, y, *extra_cols).  Rows with a
-        null id or coordinate are dropped: they have no distance (the
-        ring path never meets them either)."""
+    def from_table(cls, tbl, extra_cols: tuple, knn_dist: str | None = None) -> "_ResidentIndex":
+        """Index of an Arrow table's (id, x, y, *extra_cols) and, if
+        named, its ``knn_dist`` column.  Rows with a null id or
+        coordinate are dropped: they have no distance (the ring path
+        never meets them either)."""
         import pyarrow.compute as pc
 
         cols = ("id", "x", "y", *extra_cols)
@@ -883,7 +935,10 @@ class _ResidentIndex:
             if extra_cols
             else None
         )
-        return cls(arr("id", np.int64), arr("x", np.float64), arr("y", np.float64), es, extra_cols)
+        return cls(
+            arr("id", np.int64), arr("x", np.float64), arr("y", np.float64), es, extra_cols,
+            knn_dist=None if knn_dist is None else arr(knn_dist, np.float64),
+        )
 
     def _ix(self, v):
         return np.clip(np.floor((v - self.x0) / self.cs), 0, self.nx - 1).astype(np.int64)
@@ -907,32 +962,71 @@ class _ResidentIndex:
             + np.arange(iy0, iy1 + 1, dtype=np.int64)[None, :]
         ).ravel()
 
-    def _dist(self, qx: float, qy: float, qe, idx: np.ndarray) -> np.ndarray:
-        d = qx - self.xs[idx]
+    def _dists(self, qx, qy, qe, idx: np.ndarray) -> np.ndarray:
+        """Queries x points-at-``idx`` matrix of exact distances, in the
+        op order of ``_knn_scan`` and ``euclidean_nd``."""
+        d = qx[:, None] - self.xs[idx][None, :]
         d *= d
-        dy = qy - self.ys[idx]
+        dy = qy[:, None] - self.ys[idx][None, :]
         dy *= dy
         d += dy
-        for j in range(0 if qe is None else len(qe)):
-            dj = qe[j] - self.es[idx, j]
+        for j in range(0 if qe is None else qe.shape[1]):
+            dj = qe[:, j][:, None] - self.es[idx, j][None, :]
             dj *= dj
             d += dj
         return np.sqrt(d, out=d)
 
-    def _ring_radius(self, cix, ciy, k: int) -> np.ndarray:
-        """Per query, the smallest Chebyshev ring radius whose block
-        around the query's cell holds >= k points (k <= n): geometric
-        growth, then bisection, all counted from the summed-area table."""
+    def _groups(self, qx, qy):
+        """The batched kernels' query groups: the batch order (by group,
+        then x, y), group start offsets (with the end), per group the
+        cell range [gx0, gx1] x [gy0, gy1] of its square, and per group
+        its queries' box (lx, hx, ly, hy).  A query outside the points'
+        bounding box is a group of its own: its clamped cell says little
+        about where it is."""
+        cix, ciy = self._ix(qx), self._iy(qy)
+        out = ~((qx >= self.x0) & (qx <= self.x1) & (qy >= self.y0) & (qy <= self.y1))
+        # the largest square level holding at most _GROUP_POINTS points:
+        # squares nest, so their counts grow with the level
+        level = np.zeros(len(qx), dtype=np.int64)
+        s = self.sat
+        for lv in range(1, _GROUP_LEVELS + 1):
+            x0, y0 = (cix >> lv) << lv, (ciy >> lv) << lv
+            x1 = np.minimum(x0 + (1 << lv), self.nx)
+            y1 = np.minimum(y0 + (1 << lv), self.ny)
+            level += (s[x1, y1] - s[x0, y1] - s[x1, y0] + s[x0, y0]) <= _GROUP_POINTS
+        level[out] = 0
+        gx, gy = cix >> level, ciy >> level
+        key = (level * (self.nx + 1) + gx) * (self.ny + 1) + gy
+        key[out] = -1 - np.flatnonzero(out)
+        order = np.lexsort((qy, qx, key))
+        key = key[order]
+        starts = np.flatnonzero(np.concatenate([[True], key[1:] != key[:-1], [True]]))
+        first = order[starts[:-1]]
+        lv = level[first]
+        gx0, gy0 = gx[first] << lv, gy[first] << lv
+        gx1 = np.minimum(gx0 + (1 << lv) - 1, self.nx - 1)
+        gy1 = np.minimum(gy0 + (1 << lv) - 1, self.ny - 1)
+        sx, sy, heads = qx[order], qy[order], starts[:-1]
+        boxes = zip(
+            np.minimum.reduceat(sx, heads).tolist(), np.maximum.reduceat(sx, heads).tolist(),
+            np.minimum.reduceat(sy, heads).tolist(), np.maximum.reduceat(sy, heads).tolist(),
+        )
+        return order, starts, (gx0, gx1, gy0, gy1), boxes
+
+    def _ring_radius(self, x0, x1, y0, y1, k: int) -> np.ndarray:
+        """Per cell range [x0, x1] x [y0, y1], the smallest Chebyshev
+        dilation whose block holds >= k points (k <= n): geometric growth,
+        then bisection, all counted from the summed-area table."""
 
         def holds(q, r):
-            x0 = np.maximum(cix[q] - r, 0)
-            x1 = np.minimum(cix[q] + r, self.nx - 1) + 1
-            y0 = np.maximum(ciy[q] - r, 0)
-            y1 = np.minimum(ciy[q] + r, self.ny - 1) + 1
+            a = np.maximum(x0[q] - r, 0)
+            b = np.minimum(x1[q] + r, self.nx - 1) + 1
+            c = np.maximum(y0[q] - r, 0)
+            d = np.minimum(y1[q] + r, self.ny - 1) + 1
             s = self.sat
-            return s[x1, y1] - s[x0, y1] - s[x1, y0] + s[x0, y0] >= k
+            return s[b, d] - s[a, d] - s[b, c] + s[a, c] >= k
 
-        nq = len(cix)
+        nq = len(x0)
         lo = np.full(nq, -1, dtype=np.int64)  # largest radius known short
         hi = np.zeros(nq, dtype=np.int64)
         todo = np.arange(nq)
@@ -949,81 +1043,39 @@ class _ResidentIndex:
             todo = todo[hi[todo] - lo[todo] > 1]
         return hi
 
-    def _candidates(self, qx: float, qy: float, qe, cix: int, ciy: int, r: int, k: int):
-        """(k-th-distance upper bound, candidate positions) of one query."""
-        block = self._gather(
-            self._block(
-                max(cix - r, 0), min(cix + r, self.nx - 1),
-                max(ciy - r, 0), min(ciy + r, self.ny - 1),
-            )
-        )
-        ub = float(np.partition(self._dist(qx, qy, qe, block), k - 1)[k - 1])
-        Me = ub * (1.0 + 1e-9) + 1e-300
-        ix0, ix1 = int(self._ix(qx - Me)), int(self._ix(qx + Me))
-        iy0, iy1 = int(self._iy(qy - Me)), int(self._iy(qy + Me))
+    def _box(self, lx: float, hx: float, ly: float, hy: float, reach: float):
+        """The cells within ``reach`` of the box [lx, hx] x [ly, hy]:
+        their block's corner (ix0, iy0), its width, and per cell the
+        squared near distance and the squared far-corner distance from
+        the box (cell edges widened by ``tol``)."""
         cs, tol = self.cs, self.tol
+        ix0 = _clip_cell((lx - reach - self.x0) / cs, self.nx)
+        ix1 = _clip_cell((hx + reach - self.x0) / cs, self.nx)
+        iy0 = _clip_cell((ly - reach - self.y0) / cs, self.ny)
+        iy1 = _clip_cell((hy + reach - self.y0) / cs, self.ny)
         xl = self.x0 + np.arange(ix0, ix1 + 1) * cs - tol
         yl = self.y0 + np.arange(iy0, iy1 + 1) * cs - tol
         xh, yh = xl + (cs + 2 * tol), yl + (cs + 2 * tol)
-        near2 = (
-            np.maximum(np.maximum(xl - qx, qx - xh), 0.0) ** 2
-        )[:, None] + (np.maximum(np.maximum(yl - qy, qy - yh), 0.0) ** 2)[None, :]
-        cnt = self.counts[ix0 : ix1 + 1, iy0 : iy1 + 1]
-        if qe is None:
-            # the box of the bound holds every cell within it, hence the
-            # k points it was taken from: the cover always exists
-            far2 = (np.maximum(qx - xl, xh - qx) ** 2)[:, None] + (
-                np.maximum(qy - yl, yh - qy) ** 2
-            )[None, :]
-            f = far2[cnt > 0]
-            o = np.argsort(f, kind="stable")
-            cover = np.searchsorted(np.cumsum(cnt[cnt > 0][o]), k)
-            cell_ub = float(np.sqrt(f[o][cover])) * (1.0 + 1e-9)
-            if cell_ub < ub:
-                ub = cell_ub
-                Me = ub * (1.0 + 1e-9) + 1e-300
-        sel = np.flatnonzero((near2 <= Me * Me).ravel() & (cnt.ravel() > 0))
-        w = iy1 - iy0 + 1
-        cells = (ix0 + sel // w) * self.ny + iy0 + sel % w
-        return ub, self._gather(cells)
+        near2 = (np.maximum(np.maximum(xl - hx, lx - xh), 0.0) ** 2)[:, None] + (
+            np.maximum(np.maximum(yl - hy, ly - yh), 0.0) ** 2
+        )[None, :]
+        far2 = (np.maximum(hx - xl, xh - lx) ** 2)[:, None] + (
+            np.maximum(hy - yl, yh - ly) ** 2
+        )[None, :]
+        return ix0, iy0, iy1 - iy0 + 1, near2, far2
 
-    def reverse(self, qx: float, qy: float) -> np.ndarray:
-        """Positions of the points whose k-NN ball holds the 2-D point q:
-        dist(q, p) <= knn_dist[p], inclusive, so a point tied with p's
-        k-th neighbour counts (it may win the (dist, id) tie-break).  Only
-        cells whose near edge is within their largest ball are scanned,
-        so the cost follows q's neighbourhood rather than n."""
-        if self.n == 0:
-            return np.empty(0, dtype=np.int64)
-        cells = [self.kd_open]
-        if self.kd_reach >= 0.0:
-            Me = self.kd_reach * (1.0 + 1e-9) + 1e-300
-            ix0, ix1 = int(self._ix(qx - Me)), int(self._ix(qx + Me))
-            iy0, iy1 = int(self._iy(qy - Me)), int(self._iy(qy + Me))
-            cs, tol = self.cs, self.tol
-            xl = self.x0 + np.arange(ix0, ix1 + 1) * cs - tol
-            yl = self.y0 + np.arange(iy0, iy1 + 1) * cs - tol
-            xh, yh = xl + (cs + 2 * tol), yl + (cs + 2 * tol)
-            near2 = (
-                np.maximum(np.maximum(xl - qx, qx - xh), 0.0) ** 2
-            )[:, None] + (np.maximum(np.maximum(yl - qy, qy - yh), 0.0) ** 2)[None, :]
-            kd = self.cell_kd[ix0 : ix1 + 1, iy0 : iy1 + 1]
-            lim = kd * (1.0 + 1e-9) + 1e-300
-            sel = np.flatnonzero(
-                ((kd >= 0.0) & np.isfinite(kd) & (near2 <= lim * lim)).ravel()
-            )
-            w = iy1 - iy0 + 1
-            cells.append((ix0 + sel // w) * self.ny + iy0 + sel % w)
-        idx = self._gather(np.concatenate(cells))
-        return idx[self._dist(qx, qy, None, idx) <= self.knn_dist[idx]]
+    def _cells(self, ix0: int, iy0: int, w: int, sel: np.ndarray) -> np.ndarray:
+        """Flat ids of the cells at ``sel`` of a ``_box`` block."""
+        return (ix0 + sel // w) * self.ny + iy0 + sel % w
 
     def knn(self, qid, qx, qy, qe, k: int) -> dict | None:
         """Exact (qid, id, dist, rank) columns for the query batch, or
-        None when nothing matches.  Queries with a NaN coordinate (a
-        null in the batch) have no distance and get no rows."""
-        keep = ~(np.isnan(qx) | np.isnan(qy))
+        None when nothing matches.  Queries with a NaN or infinite
+        coordinate (a null in the batch gives NaN) have no distance and
+        get no rows."""
+        keep = np.isfinite(qx) & np.isfinite(qy)
         if qe is not None:
-            keep &= ~np.isnan(qe).any(axis=1)
+            keep &= np.isfinite(qe).all(axis=1)
         if self.n == 0 or not keep.any():
             return None
         qid, qx, qy = qid[keep], qx[keep], qy[keep]
@@ -1038,19 +1090,137 @@ class _ResidentIndex:
                 k, best_d, best_i,
             )
             return _best_columns(qid, best_d, best_i)
-        cix, ciy = self._ix(qx), self._iy(qy)
-        r = self._ring_radius(cix, ciy, k)
-        for j in range(nq):
-            e = None if qe is None else qe[j]
-            ub, idx = self._candidates(qx[j], qy[j], e, cix[j], ciy[j], r[j], k)
-            bd, bi = best_d[j : j + 1], best_i[j : j + 1]
-            _knn_scan(
-                qx[j : j + 1], qy[j : j + 1], None if e is None else qe[j : j + 1],
-                np.array([ub]), self.xs[idx], self.ys[idx], self.ids[idx],
-                None if self.es is None else self.es[idx], k, bd, bi,
-            )
-            best_d[j], best_i[j] = bd[0], bi[0]
+        order, starts, (gx0, gx1, gy0, gy1), boxes = self._groups(qx, qy)
+        r = self._ring_radius(gx0, gx1, gy0, gy1, k)
+        sx, sy = qx[order], qy[order]
+        se = None if qe is None else qe[order]
+        seeds = zip(
+            np.maximum(gx0 - r, 0).tolist(), np.minimum(gx1 + r, self.nx - 1).tolist(),
+            np.maximum(gy0 - r, 0).tolist(), np.minimum(gy1 + r, self.ny - 1).tolist(),
+        )
+        for a, b, (lx, hx, ly, hy), block in zip(
+            starts[:-1].tolist(), starts[1:].tolist(), boxes, seeds
+        ):
+            gqx, gqy = sx[a:b], sy[a:b]
+            gqe = None if se is None else se[a:b]
+            # 1. each query's k-th distance among the seed block's points
+            seed = self._gather(self._block(*block))
+            ub = np.empty(b - a)
+            rows = max(1, _BLOCK // len(seed))
+            for s in range(0, b - a, rows):
+                d = self._dists(gqx[s : s + rows], gqy[s : s + rows],
+                                None if gqe is None else gqe[s : s + rows], seed)
+                ub[s : s + rows] = np.partition(d, k - 1, axis=1)[:, k - 1]
+            M = float(ub.max())
+            Me = M * (1.0 + 1e-9) + 1e-300
+            ix0, iy0, w, near2, far2 = self._box(lx, hx, ly, hy, Me)
+            cnt = self.counts[ix0 : ix0 + near2.shape[0], iy0 : iy0 + w]
+            if gqe is None:
+                # 2. the box of the bounds holds every cell within them,
+                # hence the k points each was taken from: the cover
+                # always exists
+                f = far2[cnt > 0]
+                o = np.argsort(f, kind="stable")
+                cover = np.searchsorted(np.cumsum(cnt[cnt > 0][o]), k)
+                cell_ub = float(np.sqrt(f[o][cover])) * (1.0 + 1e-9)
+                if cell_ub < M:
+                    np.minimum(ub, cell_ub, out=ub)
+                    M = float(ub.max())
+                    Me = M * (1.0 + 1e-9) + 1e-300
+            # 3. the candidates, and the kernel's box prune per query
+            sel = np.flatnonzero((near2 <= Me * Me).ravel() & (cnt.ravel() > 0))
+            cand = self._gather(self._cells(ix0, iy0, w, sel))
+            bd = [np.empty(0)] * (b - a)
+            bi = [np.empty(0, dtype=np.int64)] * (b - a)
+            # candidate slices keep _knn_scan's 128-query chunks within _BLOCK
+            step = max(k, _BLOCK // 128)
+            for c in range(0, len(cand), step):
+                idx = cand[c : c + step]
+                _knn_scan(
+                    gqx, gqy, gqe, ub, self.xs[idx], self.ys[idx], self.ids[idx],
+                    None if self.es is None else self.es[idx], k, bd, bi,
+                )
+            for j, q in enumerate(order[a:b].tolist()):
+                best_d[q], best_i[q] = bd[j], bi[j]
         return _best_columns(qid, best_d, best_i)
+
+    def _pairs(self, qx, qy, qe, hits, max_pairs: int | None):
+        """Shared loop of ``within`` and ``reverse``: per query group,
+        ``hits(lx, hx, ly, hy, group rows)`` gives the candidate positions
+        and a test of the (group queries x candidates) distance matrix;
+        every pair passing it is kept.  Returns (query rows, positions,
+        distances) in no particular order, or None once more than
+        ``max_pairs`` pairs are found."""
+        empty = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64), np.empty(0))
+        if self.n == 0 or not len(qx):
+            return empty
+        order, starts, _, boxes = self._groups(qx, qy)
+        sx, sy = qx[order], qy[order]
+        se = None if qe is None else qe[order]
+        out_q, out_p, out_d = [], [], []
+        found = 0
+        for a, b, (lx, hx, ly, hy) in zip(starts[:-1].tolist(), starts[1:].tolist(), boxes):
+            cand, test = hits(lx, hx, ly, hy, order[a:b])
+            cols = max(1, _BLOCK // (b - a))
+            for c in range(0, len(cand), cols):
+                idx = cand[c : c + cols]
+                d = self._dists(sx[a:b], sy[a:b], None if se is None else se[a:b], idx)
+                rows, at = np.nonzero(test(d, idx))
+                found += len(rows)
+                if max_pairs is not None and found > max_pairs:
+                    return None
+                out_q.append(order[a + rows])
+                out_p.append(idx[at])
+                out_d.append(d[rows, at])
+        if not out_q:
+            return empty
+        return np.concatenate(out_q), np.concatenate(out_p), np.concatenate(out_d)
+
+    def within(self, qx, qy, qe, radius, max_pairs: int | None = None):
+        """Radius queries: every (query row, point position, dist) with
+        dist <= the query's radius, inclusive, as ``range_join`` tests it.
+        Queries must have finite coordinates and a non-NaN radius.  None
+        once more than ``max_pairs`` pairs are found."""
+
+        def hits(lx, hx, ly, hy, rows):
+            rad = radius[rows]
+            R = float(rad.max())
+            if R < 0.0:
+                return np.empty(0, dtype=np.int64), None
+            Me = R * (1.0 + 1e-9) + 1e-300
+            ix0, iy0, w, near2, _ = self._box(lx, hx, ly, hy, Me)
+            cnt = self.counts[ix0 : ix0 + near2.shape[0], iy0 : iy0 + w]
+            sel = np.flatnonzero((near2 <= Me * Me).ravel() & (cnt.ravel() > 0))
+            cand = self._gather(self._cells(ix0, iy0, w, sel))
+            return cand, lambda d, idx: d <= rad[:, None]
+
+        return self._pairs(qx, qy, qe, hits, max_pairs)
+
+    def reverse(self, qx, qy, qe=None, max_pairs: int | None = None):
+        """Reverse-kNN queries: every (query row, point position, dist)
+        where the point's kNN ball holds the query, dist <= knn_dist[p]
+        inclusive, so a query tied with p's k-th neighbour counts (it may
+        win the (dist, id) tie-break).  Only cells whose near edge is
+        within their largest ball are scanned, so the cost follows each
+        query's neighbourhood rather than n.  The cell prune is 2-D,
+        which stays valid in D > 2: dist_D >= dist_2.  None once more
+        than ``max_pairs`` pairs are found."""
+
+        def hits(lx, hx, ly, hy, rows):
+            cells = [self.kd_open]
+            if self.kd_reach >= 0.0:
+                Me = self.kd_reach * (1.0 + 1e-9) + 1e-300
+                ix0, iy0, w, near2, _ = self._box(lx, hx, ly, hy, Me)
+                kd = self.cell_kd[ix0 : ix0 + near2.shape[0], iy0 : iy0 + w]
+                lim = kd * (1.0 + 1e-9) + 1e-300
+                sel = np.flatnonzero(
+                    ((kd >= 0.0) & np.isfinite(kd) & (near2 <= lim * lim)).ravel()
+                )
+                cells.append(self._cells(ix0, iy0, w, sel))
+            cand = self._gather(np.concatenate(cells))
+            return cand, lambda d, idx: d <= self.knn_dist[idx][None, :]
+
+        return self._pairs(qx, qy, qe, hits, max_pairs)
 
 
 # Resident copies of PERSISTED point frames, keyed weakly by the frame
@@ -1142,11 +1312,12 @@ def drop_copies(path: str) -> None:
                 del _registered[frame]
 
 
-def _resident_index(points: DataFrame, extra_cols: tuple) -> _ResidentIndex:
+def _resident_index(points: DataFrame, extra_cols: tuple, collect: bool = True):
     """The driver copy of ``points``: built from its registered table, or
     held across calls for a persisted frame, or collected afresh (one
     scan job) for any other — a frame that is not persisted may be
-    re-read from changed files, so it is never held."""
+    re-read from changed files, so it is never held.  With ``collect``
+    False, a copy that is not held already is None instead: no job."""
     with _resident_lock:
         reg = _registered.get(points)
         # registered tables are 2-D states (id, x, y)
@@ -1158,23 +1329,25 @@ def _resident_index(points: DataFrame, extra_cols: tuple) -> _ResidentIndex:
     if token is None:
         with _resident_lock:
             _resident.pop(points, None)
-        return _ResidentIndex.collect(points, extra_cols)
+        return _ResidentIndex.collect(points, extra_cols) if collect else None
     with _resident_lock:
         held = _resident.get(points)
         if held is None or held[0] != token or held[1].extra_cols != extra_cols:
+            if not collect:
+                return None
             held = (token, _ResidentIndex.collect(points, extra_cols))
             _resident[points] = held
         return held[1]
 
 
-def _collect_queries(queries: DataFrame, extra_cols: tuple, limit: int):
-    """At most ``limit`` rows (qid, x, y, *extra_cols) of ``queries`` as
-    an Arrow table.  A local frame (e.g. createDataFrame of driver data)
-    is collected without a job; any other in one job — toArrow, since
-    collecting a limit scans partitions in growing waves, a job each."""
+def _collect_queries(queries: DataFrame, cols: tuple, limit: int):
+    """At most ``limit`` rows of ``queries``' ``cols`` (the first a long
+    id, the others doubles) as an Arrow table.  A local frame (e.g.
+    createDataFrame of a pandas frame) is collected without a job; any
+    other in one job — toArrow, since collecting a limit scans
+    partitions in growing waves, a job each."""
     import pyarrow as pa
 
-    cols = ("qid", "x", "y", *extra_cols)
     q = queries.select(*cols).limit(limit)
     if not queries.isLocal():
         return q.toArrow()
@@ -1187,11 +1360,73 @@ def _collect_queries(queries: DataFrame, extra_cols: tuple, limit: int):
     )
 
 
+def _query_limit(copy_bytes: int, cols: tuple) -> int:
+    """Most query rows of ``cols`` (8 B a value) one driver call takes:
+    what a copy of ``copy_bytes`` leaves of the byte budget, and at most
+    the driver-work bound."""
+    room = _RESIDENT_MAX_BYTES - copy_bytes
+    return max(0, min(room // (8 * len(cols)), _DRIVER_MAX_REDO))
+
+
+def local_queries(queries: DataFrame, cols: tuple, copy_bytes: int):
+    """The rows of a driver-local query frame as an Arrow table of
+    ``cols``, with no job, when they fit ``_query_limit``; None for any
+    other frame, for more rows, or when a row holds a null or a
+    non-finite value (the Spark plans keep their own semantics for
+    those).  ``range_join`` and ``reverse_knn`` answer such a batch from
+    a held copy."""
+    import pyarrow.compute as pc
+
+    limit = _query_limit(copy_bytes, cols)
+    if not limit or not queries.isLocal():
+        return None
+    tbl = _collect_queries(queries, cols, limit + 1)
+    if tbl.num_rows > limit:
+        return None
+    for c in cols:
+        col = tbl.column(c)
+        if col.null_count or (c != cols[0] and not pc.all(pc.is_finite(col)).as_py()):
+            return None
+    return tbl
+
+
+def _query_arrays(qtbl, extra_cols: tuple):
+    """(x, y, extra matrix or None) of a collected query table; nulls
+    become NaN."""
+
+    def col(name):
+        return qtbl.column(name).to_numpy().astype(np.float64, copy=False)
+
+    es = np.column_stack([col(c) for c in extra_cols]) if extra_cols else None
+    return col("x"), col("y"), es
+
+
+def pair_limit(copy_bytes: int, qtbl) -> int:
+    """Most (qid, id, dist) rows, 24 B each, that a driver answer may
+    hold beside the copy and the collected queries: ``within`` and
+    ``reverse`` give up past it, and the Spark plan answers instead."""
+    return max(0, (_RESIDENT_MAX_BYTES - copy_bytes - qtbl.nbytes) // 24)
+
+
+def pairs_frame(spark, qid: np.ndarray, index: _ResidentIndex, pairs) -> DataFrame:
+    """A local (qid, id, dist) frame of ``_ResidentIndex.within`` /
+    ``reverse`` pairs, ordered by (qid, dist, id) like the Spark plans'
+    results."""
+    import pyarrow as pa
+
+    q, p, d = pairs
+    if not len(q):
+        return spark.createDataFrame([], "qid long, id long, dist double")
+    qq, ii = qid[q], index.ids[p]
+    o = np.lexsort((ii, d, qq))
+    return spark.createDataFrame(pa.table({"qid": qq[o], "id": ii[o], "dist": d[o]}))
+
+
 def _resident_knn(points: DataFrame, qtbl, k: int, extra_cols: tuple) -> DataFrame:
-    """knn_for_queries' small-batch path: answer the collected query
-    batch (an Arrow table of qid, x, y, *extra_cols) on the driver; the
-    result is a local DataFrame.  A query with a null qid names no query
-    and gets no rows."""
+    """knn_for_queries' driver path: answer the collected query batch (an
+    Arrow table of qid, x, y, *extra_cols) on the driver; the result is a
+    local DataFrame.  A query with a null qid names no query and gets no
+    rows."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -1200,18 +1435,9 @@ def _resident_knn(points: DataFrame, qtbl, k: int, extra_cols: tuple) -> DataFra
     _record_stats(0, 0, index.n, 0)
     if qtbl.column("qid").null_count:
         qtbl = qtbl.filter(pc.is_valid(qtbl.column("qid")))
-
-    def col(name):
-        # nulls -> NaN: such queries are skipped by index.knn
-        return qtbl.column(name).to_numpy().astype(np.float64, copy=False)
-
-    cols = index.knn(
-        qtbl.column("qid").to_numpy().astype(np.int64, copy=False),
-        col("x"),
-        col("y"),
-        np.column_stack([col(c) for c in extra_cols]) if extra_cols else None,
-        k,
-    )
+    # queries with a null (NaN) coordinate are skipped by index.knn
+    qx, qy, qe = _query_arrays(qtbl, extra_cols)
+    cols = index.knn(qtbl.column("qid").to_numpy().astype(np.int64, copy=False), qx, qy, qe, k)
     if cols is None:
         return spark.createDataFrame([], _OUT_SCHEMA)
     # the Arrow types map to _OUT_SCHEMA exactly; naming the schema again
@@ -1257,19 +1483,21 @@ def knn_for_queries(
     together with ``spec`` so no per-call fixed driver job remains
     (grid.grid_and_extent computes both in one aggregate).
 
-    Serving small batches.  When ``points`` fits ``_RESIDENT_MAX_BYTES``
+    Serving from the driver.  When ``points`` fits ``_RESIDENT_MAX_BYTES``
     (8 bytes per id / coordinate value, 48 MiB: ~2.1M 2-D points — known
     from the extent's n, no job) and the queries are external
-    (``queries_within_extent=False``), one query-scale job collects at
-    most ``_SMALL_BATCH`` + 1 query rows (a driver-local query frame
-    needs no job); it replaces the ring path's query-extent aggregate
-    for small batches.  A batch of at most ``_SMALL_BATCH`` (512)
-    queries is then answered exactly on the driver from a cell-sorted
-    numpy copy of the points (``_ResidentIndex``, the brute tail's
-    kernel, bit-identical rows) and returned as a local DataFrame: no
-    ring round.  A frame with a registered copy (a committed index
-    state, see ``register_copy``) is indexed from that table.  Otherwise
-    the copy is held across calls only for a PERSISTED frame
+    (``queries_within_extent=False``), the query rows are collected, at
+    most what the point copy leaves of the budget (24 B a 2-D query row)
+    and at most ``_DRIVER_MAX_REDO`` of them, plus one: one query-scale
+    job, none for a driver-local query frame.  It replaces the ring
+    path's query-extent aggregate.  A batch within both bounds is then
+    answered exactly on the driver from a cell-sorted numpy copy of the
+    points (``_ResidentIndex.knn``: one candidate gather and one call of
+    the brute tail's kernel per cell group, bit-identical rows) and
+    returned as a local DataFrame: no ring round, whatever the batch
+    size.  A frame with a registered copy (a committed index state, see
+    ``register_copy``) is indexed from that table.  Otherwise the copy
+    is held across calls only for a PERSISTED frame
     (``points.is_cached``), keyed weakly by the frame object; a call that
     finds the frame no longer cached (unpersisted, cache cleared, or
     persisted anew) drops or rebuilds it, and dropping the frame object
@@ -1277,11 +1505,13 @@ def knn_for_queries(
     (the query collect) plus whatever consumes the result.  A frame that
     is neither registered nor persisted may be re-read from changed
     files, so it is never held: each call collects it in one scan job.
-    Bulk batches (more than 512 queries), the self graph
-    (``build_knn_graph``) and the distributed repair of ``apply_batch``
-    (``queries_within_extent=True``) keep the ring rounds; a bulk batch
-    from a query frame that is not driver-local pays the collect job
-    on top.
+    Batches over either bound, point sets over the budget, the self
+    graph (``build_knn_graph``) and the distributed repair of
+    ``apply_batch`` (``queries_within_extent=True``) keep the ring
+    rounds; a batch over the bounds from a query frame that is not
+    driver-local pays the collect job on top.  On both paths a query
+    with a null qid, or a null, NaN or infinite coordinate, gets no
+    rows.
     """
     extra_cols = tuple(extra_cols)
     n_extra = len(extra_cols)
@@ -1309,9 +1539,19 @@ def knn_for_queries(
         _record_stats(0, 0, 0, 0)
         return spark.createDataFrame([], _OUT_SCHEMA)
     if not queries_within_extent and fits_resident(ext["n"], n_extra=n_extra):
-        qtbl = _collect_queries(queries, extra_cols, _SMALL_BATCH + 1)
-        if qtbl.num_rows <= _SMALL_BATCH:
-            return _resident_knn(points, qtbl, k, extra_cols)
+        qcols = ("qid", "x", "y", *extra_cols)
+        limit = _query_limit(resident_bytes(ext["n"], n_extra=n_extra), qcols)
+        if limit:
+            qtbl = _collect_queries(queries, qcols, limit + 1)
+            if qtbl.num_rows <= limit:
+                return _resident_knn(points, qtbl, k, extra_cols)
+    if not queries_within_extent:
+        # a query with a null qid names no query, and one with a null,
+        # NaN or infinite coordinate has no distance: neither gets rows,
+        # as on the driver path (abs(NaN) < inf is false in Spark, and a
+        # null compares to null, which the filter drops)
+        finite = [F.abs(F.col(c)) < F.lit(float("inf")) for c in ("x", "y", *extra_cols)]
+        queries = queries.filter(reduce(lambda a, b: a & b, finite, F.col("qid").isNotNull()))
     if spec is None:
         from rindex_spark.grid import grid_from_extent, shrink_to_occupancy
 

@@ -10,6 +10,19 @@ equi-join on (cell_x, cell_y) against the points and an exact distance
 refine.  Catalyst sees an equi-join -> shuffle-hash/sort-merge with AQE;
 the covering-cells step is the partition pruning the reference does with
 sphere ``min_distance`` bounds (rindex.rs:162-173).
+
+Driver path.  When the driver already holds a copy of the points (a
+registered copy of a committed state, or the copy ``knn_for_queries``
+keeps for a persisted frame that is still cached) and the query frame
+is driver-local, the batch is answered on the driver with no Spark job:
+``_ResidentIndex.within`` groups the queries by cell, gathers each
+group's candidate cells once and tests ``dist <= radius`` with the
+distance of ``euclidean_nd`` (same op order, bit-identical dists).  The
+result is a local frame in the same (qid, dist, id) order.  The query
+rows must fit what the copy leaves of the byte budget, at most
+``knn._DRIVER_MAX_REDO`` of them, with no null and no non-finite value;
+an answer that outgrows the budget is dropped.  Every other batch takes
+the Spark plan below.
 """
 
 from __future__ import annotations
@@ -20,6 +33,14 @@ from pyspark.sql import functions as F
 from rindex_spark.config import EngineConfig, GridSpec
 from rindex_spark.functions.distance import euclidean_nd
 from rindex_spark.grid import explode_block, infer_grid, with_cells
+from rindex_spark.operators.knn import (
+    _query_arrays,
+    _resident_index,
+    local_queries,
+    pair_limit,
+    pairs_frame,
+    resident_bytes,
+)
 
 
 def range_join(
@@ -51,8 +72,22 @@ def range_join(
     lies inside the 2-D covering block of radius r.  The refine is the
     exact full-D distance (knn.py:126-136 carries the same argument
     for the kNN lane).
+
+    A batch that the driver path (module docstring) answers runs no
+    Spark job, whatever ``spec`` and ``extent`` say.
     """
     extra_cols = tuple(extra_cols)
+    index = _resident_index(points, extra_cols, collect=False)
+    if index is not None:
+        copy = resident_bytes(index.n, n_extra=len(extra_cols))
+        qtbl = local_queries(queries, ("qid", "x", "y", *extra_cols, "radius"), copy)
+        if qtbl is not None:
+            qx, qy, qe = _query_arrays(qtbl, extra_cols)
+            radius = qtbl.column("radius").to_numpy()
+            pairs = index.within(qx, qy, qe, radius, pair_limit(copy, qtbl))
+            if pairs is not None:
+                qid = qtbl.column("qid").to_numpy()
+                return pairs_frame(points.sparkSession, qid, index, pairs)
     cfg = cfg or EngineConfig()
     if spec is None:
         if extent is not None:

@@ -19,6 +19,21 @@ bound infinite — some point has < k neighbors — or extent-scale
 bounds).  The surviving pairs equi-join the points, then the exact
 row-level refine ``dist <= knn_dist`` (rindex.rs:817-822) runs as a
 column expression.
+
+Driver path.  An ``rknn_stats`` handle on points that fit the resident
+byte budget also collects each point's ``knn_dist`` once, when it is
+built, into a cell-sorted driver copy (``_ResidentIndex`` with per-cell
+maximum ``knn_dist``).  A call with that handle and a driver-local query
+frame is answered on the driver with no Spark job:
+``_ResidentIndex.reverse`` groups the queries by cell, scans the cells
+whose near edge is within their largest ball (and every cell holding a
+point with fewer than k neighbours), and tests ``dist <= knn_dist`` with
+the distance of ``euclidean_nd`` (same op order, bit-identical dists).
+The result is a local frame in the same (qid, dist, id) order.  The
+query rows must fit what the copy leaves of the budget, at most
+``knn._DRIVER_MAX_REDO`` of them, with no null and no non-finite
+coordinate; an answer that outgrows the budget is dropped.  Every other
+batch takes the Spark plan.
 """
 
 from __future__ import annotations
@@ -30,6 +45,15 @@ from pyspark.storagelevel import StorageLevel
 from rindex_spark.config import GridSpec
 from rindex_spark.functions.distance import euclidean_nd
 from rindex_spark.grid import cell_min_dist, explode_block, with_cells
+from rindex_spark.operators.knn import (
+    _query_arrays,
+    _ResidentIndex,
+    fits_resident,
+    local_queries,
+    pair_limit,
+    pairs_frame,
+    resident_bytes,
+)
 from rindex_spark.operators.stats import knn_dist
 
 # Most-recent persisted per-cell stats frame OF THE CURRENT DRIVER
@@ -59,6 +83,7 @@ def rknn_stats(
     k: int,
     spec: GridSpec,
     extra_cols: tuple = (),
+    resident: bool = True,
 ) -> dict:
     """Precompute the per-cell RkNN pruning state for a (points, graph)
     pair so repeated ``reverse_knn`` calls on the same index launch
@@ -66,12 +91,17 @@ def rknn_stats(
     pattern (r3 verdict item 2; without this every call pays the stats
     aggregate + gmax collect).
 
-    Returns a handle dict {pts, stats, gmax, n_cells}; pass it as
-    ``reverse_knn(..., stats=handle)``.  The caller owns the persisted
+    Returns a handle dict {pts, stats, gmax, n_cells, index}; pass it
+    as ``reverse_knn(..., stats=handle)``.  The caller owns the persisted
     stats frame's lifecycle: release with
     ``handle["stats"].unpersist()`` when the index changes (handles
     are NOT auto-released by later calls, unlike the internal
-    per-call path)."""
+    per-call path).
+
+    ``index``: with ``resident`` and points within the resident byte
+    budget (id, coordinates and ``knn_dist`` at 8 B a value), the
+    driver copy that serves driver-local query batches (module
+    docstring), collected in one more job; None otherwise."""
     extra_cols = tuple(extra_cols)
     kd = knn_dist(graph, k)  # (id, knn_dist), inf when < k rows
     pts = with_cells(points.select("id", "x", "y", *extra_cols), spec).join(
@@ -80,20 +110,27 @@ def rknn_stats(
     pts = pts.na.fill({"knn_dist": float("inf")})
     stats = (
         pts.groupBy("ix", "iy")
-        .agg(F.max("knn_dist").alias("max_knn_dist"))
+        .agg(F.max("knn_dist").alias("max_knn_dist"), F.count(F.lit(1)).alias("n_pts"))
         .withColumnRenamed("ix", "cix")
         .withColumnRenamed("iy", "ciy")
         .persist(StorageLevel.MEMORY_ONLY)
     )
     srow = stats.agg(
-        F.max("max_knn_dist").alias("gmax"), F.count(F.lit(1)).alias("n_cells")
+        F.max("max_knn_dist").alias("gmax"),
+        F.count(F.lit(1)).alias("n_cells"),
+        F.sum("n_pts").alias("n"),
     ).collect()[0]
+    index = None
+    if resident and fits_resident(srow["n"] or 0, n_extra=len(extra_cols) + 1):
+        tbl = pts.select("id", "x", "y", *extra_cols, "knn_dist").toArrow()
+        index = _ResidentIndex.from_table(tbl, extra_cols, knn_dist="knn_dist")
     return {
         "pts": pts,
         "stats": stats,
         "gmax": srow["gmax"],
         "n_cells": srow["n_cells"],
         "extra_cols": extra_cols,
+        "index": index,
     }
 
 
@@ -126,7 +163,8 @@ def reverse_knn(
 
     ``stats`` (optional): a precomputed ``rknn_stats`` handle for this
     (points, graph, k, spec) — with it, this call launches ZERO fixed
-    driver jobs (plan construction only).
+    driver jobs (plan construction only), and a batch that the driver
+    path answers (module docstring) runs no job at all.
     """
     extra_cols = tuple(extra_cols)
     spark = points.sparkSession
@@ -135,7 +173,9 @@ def reverse_knn(
 
     if stats is None:
         _release_last_stats()
-        handle = rknn_stats(points, graph, k, spec, extra_cols=extra_cols)
+        # a per-call handle collects no driver copy: the driver path
+        # needs one built once, by the caller's rknn_stats
+        handle = rknn_stats(points, graph, k, spec, extra_cols=extra_cols, resident=False)
         _last_stats.append(handle["stats"])
     else:
         handle = stats
@@ -145,6 +185,15 @@ def reverse_knn(
 
     if not n_cells:
         return spark.createDataFrame([], "qid long, id long, dist double")
+    index = handle.get("index")
+    if index is not None and index.extra_cols == extra_cols:
+        copy = resident_bytes(index.n, n_extra=len(extra_cols) + 1)
+        qtbl = local_queries(queries, ("qid", "x", "y", *extra_cols), copy)
+        if qtbl is not None:
+            qx, qy, qe = _query_arrays(qtbl, extra_cols)
+            pairs = index.reverse(qx, qy, qe, pair_limit(copy, qtbl))
+            if pairs is not None:
+                return pairs_frame(spark, qtbl.column("qid").to_numpy(), index, pairs)
 
     q = queries.select(
         "qid",

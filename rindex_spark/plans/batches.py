@@ -48,10 +48,11 @@ affected point recomputed by ``_ResidentIndex.knn``, the ring path's
 kernel and tie-break, so rows are bit-identical), and returns local
 frames with no Spark job; collecting ops from frames that are not
 driver-local costs one job.  An affected set of more than
-``_DRIVER_MAX_REDO`` points (a bulk batch: the driver recomputes on one
-core) and over-budget states keep the distributed plan above, in which
-the driver holds only op counts.  Insert-only and delete-only batches
-skip the dead half of the repair (the common case in streaming ingest).
+``_DRIVER_MAX_REDO`` points (``knn``'s driver-work bound, shared with
+``knn_for_queries``) and over-budget states keep the distributed plan
+above, in which the driver holds only op counts.  Insert-only and
+delete-only batches skip the dead half of the repair (the common case in
+streaming ingest).
 """
 
 from __future__ import annotations
@@ -72,6 +73,7 @@ from rindex_spark.config import EngineConfig, GridSpec
 from rindex_spark.grid import infer_grid
 from rindex_spark.operators import knn as _knn
 from rindex_spark.operators.knn import (
+    _DRIVER_MAX_REDO,  # knn_for_queries' bound too; the fold reads this name
     _ResidentIndex,
     fits_resident,
     knn_for_queries,
@@ -86,14 +88,6 @@ GRAPH_ARROW = pa.schema(
     [("src", pa.int64()), ("dst", pa.int64()), ("dist", pa.float64()), ("rank", pa.int32())]
 )
 _IDS_ARROW = pa.schema([("id", pa.int64())])
-# Most points a driver fold recomputes; a larger affected set takes the
-# distributed fold.  The driver recomputes ~0.25-0.4 ms a point on one
-# core, while a distributed fold plus commit costs ~12-17 s at local[2]
-# whatever the batch.  Folds plus commits into 100k points at k = 10, on
-# 4 vCPU: 5,000 ops (~38k recomputed) 11.9 s driver against 16.6 s
-# distributed, 7,000 ops (~47k) 15.0 s against 15.3 s, 10,000 ops (~61k)
-# 21.6 s against 17.1 s.  The bound sits below that ~47k crossover.
-_DRIVER_MAX_REDO = 30_000
 
 
 @dataclass
@@ -229,8 +223,8 @@ def _fold_on_driver(
     index = _ResidentIndex(
         nid, nx, ny, None, (), knn_dist=np.concatenate([kd[alive], np.full(len(iid), -np.inf)])
     )
-    gained = [index.ids[index.reverse(x, y)] for x, y in zip(ix, iy)]
-    redo = np.unique(np.concatenate([redo, *gained]))
+    _, gained, _ = index.reverse(ix, iy)
+    redo = np.unique(np.concatenate([redo, index.ids[gained]]))
     if len(redo) > max_redo:
         return None
     keep = ~(np.isin(src, dels) | np.isin(src, redo))

@@ -177,3 +177,35 @@ def test_pair_udf_matches_kernel_through_spark(spark):
     got = {r["i"]: r["s"] for r in df.select("i", pair_cosine_udf("a", "b").alias("s")).collect()}
     assert got[1] == -1.0
     assert abs(got[0] - 4.0 / 5.0) < 1e-15
+
+
+def _refine_partitions(df) -> list[int]:
+    """The round-robin partition counts in ``df``'s physical plan."""
+    import re
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [int(n) for n in re.findall(r"RoundRobinPartitioning\((\d+)\)", plan)]
+
+
+def test_near_dup_refine_partitions_follow_the_corpus(spark):
+    """The refine's pair stream is no longer pinned to core count: a
+    corpus read in more partitions than cores spreads it that wide; the
+    pairs do not change."""
+    dim = 8
+    rows = _clustered_vecs(40, dim)
+    base = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    cores = spark.sparkContext.defaultParallelism
+    # hash-partitioned, so the only round-robin exchange is the refine's
+    wide = base.repartition(cores * 3, "vec_id")
+
+    def pairs(df):
+        return sorted((r["id_a"], r["id_b"], r["score"]) for r in df.collect())
+
+    default = embedding_near_dup(wide, threshold=0.9, dim=dim, n_planes=6, n_tables=4)
+    assert _refine_partitions(default) == [cores * 3]
+    narrow = embedding_near_dup(base.coalesce(1), threshold=0.9, dim=dim, n_planes=6, n_tables=4)
+    # the signature pass spreads a one-partition corpus to core count
+    # too; the refine stays at core count
+    assert set(_refine_partitions(narrow)) == {cores}
+    got = pairs(default)
+    assert got and got == pairs(narrow)

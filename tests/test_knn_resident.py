@@ -230,6 +230,9 @@ def test_resident_call_writes_zero_stats(spark, monkeypatch):
     pts = _points(spark, xy)
     big_q = _queries(spark, rng.uniform(-50.0, 50.0, size=(knn_mod._SMALL_BATCH + 1, 2)))
     small_q = _queries(spark, rng.uniform(-50.0, 50.0, size=(8, 2)))
+    # the budget leaves room for 8 query rows beside the points: the
+    # larger batch takes the ring path
+    monkeypatch.setattr(knn_mod, "_RESIDENT_MAX_BYTES", knn_mod.resident_bytes(700 + 8))
     monkeypatch.setitem(os.environ, "RINDEX_KNN_STATS", "1")
     knn_mod.last_run_stats.clear()
     knn_for_queries(pts, big_q, 4).count()

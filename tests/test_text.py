@@ -234,3 +234,22 @@ def test_fold_points_parquet_merge_semantics(spark, tmp_path):
     cur = fold_points_parquet(spark, p, ins2, del2)
     got = {r["id"]: (r["x"], r["y"]) for r in cur.collect()}
     assert got == {1: (1.0, 1.0), 2: (20.0, 20.0), 4: (4.0, 4.0)}
+
+
+def test_text_stats_spread_opt_out(spark):
+    """``spread=False`` makes with_text_stats a pure projection: the
+    input keeps its partitioning and row order, and the plan gains no
+    exchange; the default still spreads a narrow input."""
+    df = spark.createDataFrame(
+        [(i, f"word {i} and more text {i % 7}") for i in range(40)], "id long, text string"
+    ).coalesce(1)
+    cores = spark.sparkContext.defaultParallelism
+    kept = with_text_stats(df, spread=False)
+    assert kept.rdd.getNumPartitions() == 1
+    assert "Exchange" not in kept._jdf.queryExecution().executedPlan().toString()
+    assert [r["id"] for r in kept.collect()] == list(range(40))
+    spread = with_text_stats(df)
+    if cores > 1:
+        assert spread.rdd.getNumPartitions() == cores
+    by_id = {r["id"]: r for r in spread.collect()}
+    assert all(by_id[r["id"]] == r for r in kept.collect())
