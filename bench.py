@@ -237,45 +237,19 @@ def main() -> None:
             print(f"[bench] {name}: {timings[name]}s", file=sys.stderr, flush=True)
         return out
 
-    # --- in-artifact A/B + diagnostics for the kNN-build entries (r4
-    # verdict items 1 + 8).  The r4 release-honesty fix made each
-    # knn_for_queries call free its predecessor's persisted round
-    # states; r3's best-of-N "warm" numbers partly measured plan-cache
-    # replay of those states.  For each kNN entry we report, next to
-    # the honest best-of-N: (a) ONE repeat with release suppressed
-    # (RINDEX_KNN_KEEP_STATES) — the cache-hit replay number, bounding
-    # how much of any round-over-round delta is the honesty fix rather
-    # than machine weather — and (b) ONE instrumented repeat
-    # (RINDEX_KNN_STATS) exporting rounds / shipped-candidate-rows /
-    # replication factor, outside the timed runs (the candidate count
-    # costs an extra job per round).
-    ab: dict[str, float] = {}
+    # per-entry kNN diagnostics of the last timed repeat (rounds, shipped
+    # candidate rows, replication factor, brute-tail size): the engine
+    # records them on every call at no job
     knn_diag: dict[str, dict] = {}
 
     def bench_knn(name: str, fn):
         from rindex_spark.operators import knn as knn_mod
 
         out = bench(name, fn, min_repeats=4)
-        os.environ["RINDEX_KNN_KEEP_STATES"] = "1"
-        try:
-            t0 = time.monotonic()
-            fn()
-            ab[f"{name}_keepstates"] = round(time.monotonic() - t0, 3)
-        finally:
-            del os.environ["RINDEX_KNN_KEEP_STATES"]
-        os.environ["RINDEX_KNN_STATS"] = "1"
-        try:
-            fn()
-            knn_diag[name] = dict(knn_mod.last_run_stats)
-        finally:
-            del os.environ["RINDEX_KNN_STATS"]
+        knn_diag[name] = dict(knn_mod.last_run_stats)
         knn_mod.release_round_states()
         if verbose:
-            print(
-                f"[bench] {name}: keepstates={ab[f'{name}_keepstates']}s "
-                f"diag={knn_diag[name]}",
-                file=sys.stderr, flush=True,
-            )
+            print(f"[bench] {name}: diag={knn_diag[name]}", file=sys.stderr, flush=True)
         return out
 
     # --- headline: e2e pages -> extract -> kNN graph (k=10) ---------------
@@ -499,11 +473,6 @@ def main() -> None:
                 "n_points": n_points,
                 "n_graph_rows": n_graph_rows,
                 "docs_per_min": docs_per_min,
-                # cache-hit A/B: same build with round-state release
-                # suppressed (the r3 "warm" replay semantics) — the
-                # honest timed number minus this bounds the honesty-fix
-                # share of any round-over-round delta
-                "ab": ab,
                 # per-entry kNN diagnostics: rounds, shipped candidate
                 # rows, replication factor (shipped/n), brute-tail size
                 "knn_diag": knn_diag,

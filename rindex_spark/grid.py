@@ -83,14 +83,7 @@ def infer_grid(points: DataFrame, cfg: EngineConfig, x: str = "x", y: str = "y")
 
     One tiny aggregate job; everything else stays lazy.
     """
-    row = points.agg(
-        F.min(x).alias("xmin"),
-        F.max(x).alias("xmax"),
-        F.min(y).alias("ymin"),
-        F.max(y).alias("ymax"),
-        F.count(F.lit(1)).alias("n"),
-    ).collect()[0]
-    return grid_from_extent(row, cfg)
+    return grid_and_extent(points, cfg, x, y)[0]
 
 
 def grid_and_extent(
@@ -160,32 +153,6 @@ def explode_block(
     out = df.withColumn("cix", F.explode(F.sequence(F.col(qix) - r, F.col(qix) + r)))
     out = out.withColumn("ciy", F.explode(F.sequence(F.col(qiy) - r, F.col(qiy) + r)))
     return out
-
-
-def explode_annulus(
-    df: DataFrame,
-    r_lo: Column,
-    r_hi: Column,
-    qix: str = "qix",
-    qiy: str = "qiy",
-) -> DataFrame:
-    """Explode each row to cells with Chebyshev ring distance in
-    (r_lo, r_hi] — the incremental frontier of ring expansion, so a
-    query never re-scans cells it already visited (mirrors the
-    visited-ordering of rindex.rs:785-802 best-first descent).
-    """
-    hi = r_hi.cast("long")
-    out = df.withColumn("_rlo", r_lo.cast("long")).withColumn("_rhi", hi)
-    out = out.withColumn(
-        "cix", F.explode(F.sequence(F.col(qix) - F.col("_rhi"), F.col(qix) + F.col("_rhi")))
-    )
-    out = out.withColumn(
-        "ciy", F.explode(F.sequence(F.col(qiy) - F.col("_rhi"), F.col(qiy) + F.col("_rhi")))
-    )
-    cheb = F.greatest(
-        F.abs(F.col("cix") - F.col(qix)), F.abs(F.col("ciy") - F.col(qiy))
-    )
-    return out.filter(cheb > F.col("_rlo")).drop("_rlo", "_rhi")
 
 
 def ring_lower_bound(

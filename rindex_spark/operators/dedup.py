@@ -704,14 +704,6 @@ _last_cc_frames = _ThreadLocalFrameList()
 last_cc_rounds: int = 0
 
 
-def _release_cc_frames() -> None:
-    while _last_cc_frames:
-        try:
-            _last_cc_frames.pop().unpersist(blocking=False)
-        except Exception:
-            pass
-
-
 def benchmark_contamination(
     docs: DataFrame,
     benchmark: DataFrame,
@@ -921,7 +913,7 @@ def connected_components(
         def _ckpt(df: DataFrame) -> DataFrame:
             return _strip_ckpt_stats(df.localCheckpoint(eager=True))
 
-    _release_cc_frames()
+    _last_cc_frames.release()
     e = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
     if local_contraction:
         e = e.mapInPandas(_local_contract, "a long, b long")
@@ -959,12 +951,7 @@ def connected_components(
     changed = labels.filter("chg").count()
     labels = labels.drop("chg")
     last_cc_rounds = 1 if changed else 0
-    import os as _os
-
-    # RINDEX_CC_NO_CHECK opts out (a known-deep graph saves the one
-    # wasted probe; interleaved A/B at 1M nodes: 2.76s vs 3.30s WITH
-    # the check on the contracted chain bench).
-    if changed and not _os.environ.get("RINDEX_CC_NO_CHECK"):
+    if changed:
         # r6 round 3 — cheap convergence check after the fused first
         # round: with local contraction most graphs are ALREADY closed
         # here, but the loop still paid one full round (edge join +

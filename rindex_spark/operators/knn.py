@@ -53,24 +53,22 @@ from __future__ import annotations
 
 import os
 import threading
-import time as _time
 import weakref
 from functools import reduce
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from rindex_spark.config import EngineConfig, GridSpec
 from rindex_spark.grid import ring_lower_bound, with_cells
 
-_SUPER = 4  # grid cells per supercell side (power of 2: >> 2)
-_SUPER_SHIFT = 2
-# r6: default supercell 8x8 -> 4x4 (RINDEX_SUPER_SHIFT re-sweeps it).
-# The kernel computes the FULL query x candidate matrix per dilated
-# supercell block, so flops/query scale with block area (S + 2*khi)^2
+# Supercell side in grid cells (S = _SUPER): 4x4, measured in r6
+# against the earlier 8x8.  The kernel computes the FULL query x
+# candidate matrix per dilated supercell block, so flops/query scale
+# with block area (S + 2*khi)^2
 # while shuffle replication scales with ((S + 2*khi)/S)^2: S=4 trades
 # ~2x candidate-row replication (cheap bytes) for ~2.8x fewer kernel
 # flops.  Interleaved best-of-N at 1M points: uniform-lattice events
@@ -78,6 +76,8 @@ _SUPER_SHIFT = 2
 # clustered corpus statistically tied (8.05 vs 8.13 best-of-5).  S=16
 # measured 3x WORSE than S=8 (18s) — the flop blowup dominates long
 # before per-group overhead matters.
+_SUPER_SHIFT = 2
+_SUPER = 1 << _SUPER_SHIFT
 
 # Safety rail on the density-derived INITIAL ring radius (in cells).
 # MEASURED (r3, 2M clustered docs, e2e pipeline): capping khi0 small
@@ -92,13 +92,39 @@ _SUPER_SHIFT = 2
 # total shipped volume is bounded by the final window size instead of
 # (rounds x window).
 _KHI0_CAP = 64
+# khi0 = ceil(sqrt(_KHI0_FACTOR * k / occupancy)) cells.  Swept in r6
+# (1M clustered e2e corpus, interleaved best-of-3, kernel already
+# vectorized): factor 2.0 ships 3.48x of n at 12.8s; 1.5 ships 3.07x at
+# 11.9s; 1.0 ships 2.67x at 11.9s with a doubled (but gate-trivial)
+# brute tail; 3.0 ships 4.30x at 12.2s.  All converge in ONE round on
+# both corpus shapes; 1.5 has the wall of 1.0 with more sparse-corpus
+# margin.
+_KHI0_FACTOR = 1.5
+
+# Cogroup buckets per call: max(_MIN_BUCKETS, defaultParallelism *
+# _BUCKETS_PER_CORE).  The cogroup keys on a HASH BUCKET of the
+# supercell key, not the key itself: millions of points mean tens of
+# thousands of supercell groups, and Spark's per-group pandas machinery
+# was ~95% of round CPU.  Buckets keep each task's Arrow/pandas overhead
+# O(1); the UDF slices subgroups out with one sort + searchsorted.  16
+# per core (r6: was 4): with shuffle partitions at core count, 4
+# buckets per task is LUMPY — the round stage ran 2x-skewed (task
+# runtime 68s / 32 tasks but 4.5s wall at 1M events); 16 buckets per
+# task smooths the hash placement (interleaved A/B best-of-4: 6.25s ->
+# 5.36s) while each bucket still holds thousands of queries, so the
+# per-bucket slicing overhead stays noise.
+_MIN_BUCKETS = 64
+_BUCKETS_PER_CORE = 16
 
 _OUT_SCHEMA = "qid long, id long, dist double, rank int"
 
+# ``shipped``: the candidate rows of the row's cogroup call on its first
+# row, 0 on the others — summed by the round's one aggregate, so the
+# stats cost no job.  Dropped before the next frontier.
 _STATE_SCHEMA = (
     "qid long, qx double, qy double, qix long, qiy long, "
     "r_lo long, r_hi long, salt long, cnt long, kth double, "
-    "best_dist binary, best_id binary"
+    "best_dist binary, best_id binary, shipped long"
 )
 
 
@@ -130,14 +156,16 @@ class _ThreadLocalFrameList(threading.local):
     def append(self, frame) -> None:
         self.frames.append(frame)
 
-    def pop(self):
-        return self.frames.pop()
-
     def __len__(self) -> int:
         return len(self.frames)
 
-    def __bool__(self) -> bool:
-        return bool(self.frames)
+    def release(self, blocking: bool = False) -> None:
+        """Unpersist and forget every frame of the calling thread."""
+        while self.frames:
+            try:
+                self.frames.pop().unpersist(blocking=blocking)
+            except Exception:
+                pass
 
 
 # Persisted per-round state frames of the CURRENT THREAD's most recent
@@ -158,31 +186,21 @@ def release_round_states(blocking: bool = False) -> None:
     """Unpersist all round-state frames of the current thread's most
     recent knn_for_queries call.  Safe to call any time after the
     caller has consumed (collected / written) the returned DataFrame."""
-    while _round_states:
-        try:
-            _round_states.pop().unpersist(blocking=blocking)
-        except Exception:
-            pass
+    _round_states.release(blocking)
 
 
-# Diagnostics of the most recent knn_for_queries call when
-# RINDEX_KNN_STATS is set (r4 verdict item 8: promote the candidate-
-# volume numbers BENCH.md quotes to machine-readable fields): rounds
-# run, candidate rows shipped into the cogroup (the replication factor
-# the annulus trim + khi0 policy control), and the brute-tail size.
-# Counting candidates re-runs the uncached candidate join — measured
-# at local[2] on a 5,000-point index: 18-20 jobs hooked against 14
-# unhooked for a one-round small batch, 22 against 16 for a 2,000
-# -point batch — so it is opt-in and a hooked call is slower than an
-# unhooked one.  Every call writes the dict, including calls that run
-# no ring round (k <= 0, empty points, the resident path: all zeros),
-# so a hooked call never reports its predecessor's figures.
+# Diagnostics of the most recent knn_for_queries call of any thread:
+# rounds run, candidate rows shipped into the cogroup (the replication
+# factor the annulus trim + khi0 policy control), and the brute-tail
+# size.  The round UDF counts its candidates into the persisted state
+# and the round's one aggregate sums them, so the stats cost no job.
+# Every call writes the dict, including calls that run no ring round
+# (k <= 0, empty points, the resident path: all zeros), so it never
+# holds a predecessor's figures.
 last_run_stats: dict = {}
 
 
 def _record_stats(rounds: int, shipped_rows: int, n_points: int, brute_tail: int) -> None:
-    if not os.environ.get("RINDEX_KNN_STATS"):
-        return
     last_run_stats.clear()
     last_run_stats.update(
         {
@@ -210,21 +228,12 @@ def _make_round_udf(k: int, chunk: int = 256, cand_chunk: int = 4096, n_extra: i
     empty = pd.DataFrame(
         columns=[
             "qid", "qx", "qy", "qix", "qiy", "r_lo", "r_hi", "salt",
-            "cnt", "kth", "best_dist", "best_id",
+            "cnt", "kth", "best_dist", "best_id", "shipped",
             *[f"qe{i}" for i in range(n_extra)],
         ]
     )
 
     def fn(queries: pd.DataFrame, cand: pd.DataFrame) -> pd.DataFrame:
-        if os.environ.get("RINDEX_KNN_PROF"):
-            t0 = _time.monotonic()
-            out = _fn(queries, cand)
-            with open(f"/tmp/knn_prof_{os.getpid()}.csv", "a") as f:
-                f.write(f"{_time.monotonic()-t0:.4f},{len(queries)},{len(cand)}\n")
-            return out
-        return _fn(queries, cand)
-
-    def _fn(queries: pd.DataFrame, cand: pd.DataFrame) -> pd.DataFrame:
         """One HASH BUCKET of supercell groups (not one supercell): the
         cogroup key is pmod(gk, B) with gk = xxhash64(supercell key),
         so each call carries MANY (sx, sy, r_lo, r_hi, salt) subgroups.
@@ -239,7 +248,11 @@ def _make_round_udf(k: int, chunk: int = 256, cand_chunk: int = 4096, n_extra: i
         two subgroups: every query still meets all of its OWN group's
         candidates (superset), the extras are real points scored with
         exact distances, and the (dist, id) merge dedupes — correctness
-        is unaffected, so no collision handling is needed."""
+        is unaffected, so no collision handling is needed.
+
+        The call's candidate count rides on its first output row
+        (``shipped``).  It is exact: every candidate's gk is the key of a
+        frontier query, so a bucket holding candidates holds queries."""
         nq = len(queries)
         if nq == 0:
             return empty
@@ -286,6 +299,8 @@ def _make_round_udf(k: int, chunk: int = 256, cand_chunk: int = 4096, n_extra: i
 
         out_cnt = np.empty(nq, dtype=np.int64)
         out_kth = np.empty(nq, dtype=np.float64)
+        out_shipped = np.zeros(nq, dtype=np.int64)
+        out_shipped[0] = nc
         out_d: list[bytes] = [b""] * nq
         out_i: list[bytes] = [b""] * nq
 
@@ -526,6 +541,7 @@ def _make_round_udf(k: int, chunk: int = 256, cand_chunk: int = 4096, n_extra: i
             "kth": out_kth,
             "best_dist": out_d,
             "best_id": out_i,
+            "shipped": out_shipped,
         }
         for i in range(n_extra):
             out[f"qe{i}"] = QE[:, i]
@@ -865,6 +881,15 @@ class _ResidentIndex:
 
     def __init__(self, ids, xs, ys, es, extra_cols: tuple, knn_dist=None):
         self.extra_cols = extra_cols
+        # a point with a NaN or infinite coordinate has no distance (the
+        # ring path drops it too); it would also make the extent NaN
+        ok = np.isfinite(xs) & np.isfinite(ys)
+        if es is not None:
+            ok &= np.isfinite(es).all(axis=1)
+        if not ok.all():
+            ids, xs, ys = ids[ok], xs[ok], ys[ok]
+            es = es[ok] if es is not None else None
+            knn_dist = knn_dist[ok] if knn_dist is not None else None
         n = self.n = len(ids)
         if n == 0:
             self.ids = ids
@@ -914,9 +939,9 @@ class _ResidentIndex:
     @classmethod
     def from_table(cls, tbl, extra_cols: tuple, knn_dist: str | None = None) -> "_ResidentIndex":
         """Index of an Arrow table's (id, x, y, *extra_cols) and, if
-        named, its ``knn_dist`` column.  Rows with a null id or
-        coordinate are dropped: they have no distance (the ring path
-        never meets them either)."""
+        named, its ``knn_dist`` column.  Rows with a null id or a null,
+        NaN or infinite coordinate are dropped: they have no distance
+        (the ring path drops them too)."""
         import pyarrow.compute as pc
 
         cols = ("id", "x", "y", *extra_cols)
@@ -1422,6 +1447,12 @@ def pairs_frame(spark, qid: np.ndarray, index: _ResidentIndex, pairs) -> DataFra
     return spark.createDataFrame(pa.table({"qid": qq[o], "id": ii[o], "dist": d[o]}))
 
 
+def _all_finite(cols) -> Column:
+    """True where every column of ``cols`` is finite: abs(NaN) < inf is
+    false in Spark, and a null compares to null, which a filter drops."""
+    return reduce(lambda a, b: a & b, [F.abs(F.col(c)) < F.lit(float("inf")) for c in cols])
+
+
 def _resident_knn(points: DataFrame, qtbl, k: int, extra_cols: tuple) -> DataFrame:
     """knn_for_queries' driver path: answer the collected query batch (an
     Arrow table of qid, x, y, *extra_cols) on the driver; the result is a
@@ -1516,10 +1547,6 @@ def knn_for_queries(
     extra_cols = tuple(extra_cols)
     n_extra = len(extra_cols)
     spark = points.sparkSession
-    # supercell side (cells) — read once per call so every round of one
-    # call agrees (the annulus trim's klo is interpreted in THIS scale)
-    _ss = int(os.environ.get("RINDEX_SUPER_SHIFT", str(_SUPER_SHIFT)))
-    _S = 1 << _ss
     # k = 0 / empty index => empty result (rindex.rs:198-200), before any
     # config validation (the reference validates k only at construction).
     if k <= 0:
@@ -1527,8 +1554,14 @@ def knn_for_queries(
         return spark.createDataFrame([], _OUT_SCHEMA)
     cfg = cfg or EngineConfig(k=k)
 
+    # a point with a null, NaN or infinite coordinate has no distance:
+    # the ring path drops it before the extent (the driver copy drops it
+    # too), so it is nobody's neighbour and, in a self graph, gets no
+    # rows.  The filter is built only where it is used: a resident call
+    # with a given extent pays no plan analysis for it.
+    coords = ("x", "y", *extra_cols)
     # one aggregate job yields both the grid spec and the extent
-    ext = extent if extent is not None else points.agg(
+    ext = extent if extent is not None else points.filter(_all_finite(coords)).agg(
         F.count(F.lit(1)).alias("n"),
         F.min("x").alias("xmin"),
         F.max("x").alias("xmax"),
@@ -1545,13 +1578,11 @@ def knn_for_queries(
             qtbl = _collect_queries(queries, qcols, limit + 1)
             if qtbl.num_rows <= limit:
                 return _resident_knn(points, qtbl, k, extra_cols)
-    if not queries_within_extent:
-        # a query with a null qid names no query, and one with a null,
-        # NaN or infinite coordinate has no distance: neither gets rows,
-        # as on the driver path (abs(NaN) < inf is false in Spark, and a
-        # null compares to null, which the filter drops)
-        finite = [F.abs(F.col(c)) < F.lit(float("inf")) for c in ("x", "y", *extra_cols)]
-        queries = queries.filter(reduce(lambda a, b: a & b, finite, F.col("qid").isNotNull()))
+    points = points.filter(_all_finite(coords))
+    # a query with a null qid names no query, and one with a null, NaN or
+    # infinite coordinate has no distance: neither gets rows, as on the
+    # driver path
+    queries = queries.filter(_all_finite(coords) & F.col("qid").isNotNull())
     if spec is None:
         from rindex_spark.grid import grid_from_extent, shrink_to_occupancy
 
@@ -1585,8 +1616,8 @@ def knn_for_queries(
     r_max = int(span / spec.cell_size) + 2
 
     pts = with_cells(points.select("id", "x", "y", *extra_cols), spec)
-    pts = pts.withColumn("sx", F.shiftright("ix", _ss)).withColumn(
-        "sy", F.shiftright("iy", _ss)
+    pts = pts.withColumn("sx", F.shiftright("ix", _SUPER_SHIFT)).withColumn(
+        "sy", F.shiftright("iy", _SUPER_SHIFT)
     )
 
     # initial ring radius per SUPERCELL, derived from local density: the
@@ -1602,21 +1633,13 @@ def knn_for_queries(
             F.col("sx").alias("scx"), F.col("sy").alias("scy"), "sc_n"
         )
     )
-    occ_cell = F.col("sc_n") / F.lit(float(_S * _S))
-    # khi0 factor re-swept in r6 (1M clustered e2e corpus, interleaved
-    # best-of-3, kernel already vectorized): factor 2.0 ships 3.48x of
-    # n at 12.8s; 1.5 ships 3.07x at 11.9s; 1.0 ships 2.67x at 11.9s
-    # with a doubled (but gate-trivial) brute tail; 3.0 ships 4.30x at
-    # 12.2s.  All converge in ONE round on both corpus shapes.  1.5 is
-    # the new default — same wall as 1.0 with more sparse-corpus
-    # margin; the env knob is for re-sweeping on new data shapes.
-    khi0_factor = float(os.environ.get("RINDEX_KHI0_FACTOR", "1.5"))
+    occ_cell = F.col("sc_n") / F.lit(float(_SUPER * _SUPER))
     khi0 = F.least(
         F.greatest(
             F.lit(1).cast("long"),
             F.ceil(
                 F.sqrt(
-                    F.lit(khi0_factor * k) / F.greatest(occ_cell, F.lit(0.05))
+                    F.lit(_KHI0_FACTOR * k) / F.greatest(occ_cell, F.lit(0.05))
                 )
             ).cast("long"),
         ),
@@ -1637,8 +1660,8 @@ def knn_for_queries(
             y="qy",
             prefix="q",
         )
-        .withColumn("sx", F.shiftright("qix", _ss))
-        .withColumn("sy", F.shiftright("qiy", _ss))
+        .withColumn("sx", F.shiftright("qix", _SUPER_SHIFT))
+        .withColumn("sy", F.shiftright("qiy", _SUPER_SHIFT))
         .join(
             F.broadcast(sc_counts),
             (F.col("sx") == F.col("scx")) & (F.col("sy") == F.col("scy")),
@@ -1670,21 +1693,7 @@ def knn_for_queries(
     round_udf = _make_round_udf(k, n_extra=n_extra)
     state_schema = _state_schema(n_extra)
     finished_parts: list[DataFrame] = []
-    debug = bool(os.environ.get("RINDEX_DEBUG_TIMING"))
-    # cogroup on a HASH BUCKET of the supercell key, not the key itself:
-    # millions of points mean tens of thousands of supercell groups, and
-    # Spark's per-group pandas machinery was ~95% of round CPU.  Buckets
-    # keep each task's Arrow/pandas overhead O(1); the UDF slices
-    # subgroups out with one sort + searchsorted.  16x parallelism (r6:
-    # was 4x): with shuffle partitions at core count, 4 buckets per
-    # task is LUMPY — the round stage ran 2x-skewed (task runtime 68s /
-    # 32 tasks but 4.5s wall at 1M events); 16 buckets per task smooths
-    # the hash placement (interleaved A/B best-of-4: 6.25s -> 5.36s)
-    # while each bucket still holds thousands of queries, so the
-    # per-bucket slicing overhead stays noise.
-    n_buckets = int(
-        os.environ.get("RINDEX_KNN_BUCKETS", 0)
-    ) or max(64, spark.sparkContext.defaultParallelism * 16)
+    n_buckets = max(_MIN_BUCKETS, spark.sparkContext.defaultParallelism * _BUCKETS_PER_CORE)
     # gk: the (supercell, window, salt) identity packed into ONE long
     # (xxhash64) — candidates ship 1 key column instead of 5 (40 of the
     # 64 bytes/row of the big shuffle side); see _fn on why collisions
@@ -1692,20 +1701,11 @@ def knn_for_queries(
     q_gk = F.xxhash64("sx", "sy", "r_lo", "r_hi", "salt").alias("gk")
     c_gk = F.xxhash64("ksx", "ksy", "klo", "khi", "ksalt").alias("gk")
 
-    # RINDEX_KNN_KEEP_STATES: bench A/B hook (r4 verdict item 1) — keep
-    # the previous call's persisted round states so an IDENTICAL build
-    # reuses them via Spark's structural plan-cache match, reproducing
-    # the r3 "warm" cache-hit behaviour the release fix removed.  The
-    # side-by-side number quantifies how much of a timing delta is the
-    # honesty fix vs machine weather.
-    if not os.environ.get("RINDEX_KNN_KEEP_STATES"):
-        release_round_states()  # free the PREVIOUS call's cached rounds
-    stats_on = bool(os.environ.get("RINDEX_KNN_STATS"))
+    release_round_states()  # free the PREVIOUS call's cached rounds
     shipped_rows = 0
     rounds_run = 0
     brute_tail = 0
     for _round in range(cfg.max_rounds):
-        _t0 = _time.monotonic()
         # candidate points for each DISTINCT (supercell, ring window):
         # the supercell block dilated by r_hi — in SUPERCELL units the
         # halo is ceil(r_hi / S) so the explode stays small; cell-exact
@@ -1717,7 +1717,7 @@ def knn_for_queries(
             F.col("r_hi").alias("khi"),
             F.col("salt").alias("ksalt"),
         ).distinct()
-        halo = F.ceil(F.col("khi") / F.lit(_S)).cast("long")
+        halo = F.ceil(F.col("khi") / F.lit(_SUPER)).cast("long")
         cells = ring_keys.withColumn(
             "csx", F.explode(F.sequence(F.col("ksx") - halo, F.col("ksx") + halo))
         ).withColumn(
@@ -1726,10 +1726,10 @@ def knn_for_queries(
         # cell-exact trim of the supercell halo: keep only points within
         # Chebyshev khi CELLS of the supercell's member-cell range (the
         # union of every member query's needed annulus)
-        lo_x = F.col("ksx") * _S - F.col("khi")
-        hi_x = F.col("ksx") * _S + (_S - 1) + F.col("khi")
-        lo_y = F.col("ksy") * _S - F.col("khi")
-        hi_y = F.col("ksy") * _S + (_S - 1) + F.col("khi")
+        lo_x = F.col("ksx") * _SUPER - F.col("khi")
+        hi_x = F.col("ksx") * _SUPER + (_SUPER - 1) + F.col("khi")
+        lo_y = F.col("ksy") * _SUPER - F.col("khi")
+        hi_y = F.col("ksy") * _SUPER + (_SUPER - 1) + F.col("khi")
         # ANNULUS trim: drop the already-seen inner block [range +- klo].
         # Valid because (a) klo = each member query's own previous khi
         # (r_lo carries the prior window and is part of the group key),
@@ -1739,10 +1739,10 @@ def knn_for_queries(
         # top-k — so every inner-block point is already reflected in the
         # carried state and re-shipping it is pure waste.  Round 0
         # (klo = -1) keeps the full block.
-        seen_lo_x = F.col("ksx") * _S - F.col("klo")
-        seen_hi_x = F.col("ksx") * _S + (_S - 1) + F.col("klo")
-        seen_lo_y = F.col("ksy") * _S - F.col("klo")
-        seen_hi_y = F.col("ksy") * _S + (_S - 1) + F.col("klo")
+        seen_lo_x = F.col("ksx") * _SUPER - F.col("klo")
+        seen_hi_x = F.col("ksx") * _SUPER + (_SUPER - 1) + F.col("klo")
+        seen_lo_y = F.col("ksy") * _SUPER - F.col("klo")
+        seen_hi_y = F.col("ksy") * _SUPER + (_SUPER - 1) + F.col("klo")
         # qualified alias: frontier's subtree references pts (density
         # join), so this is a self-join from Catalyst's point of view
         cp = pts.alias("cp")
@@ -1772,8 +1772,8 @@ def knn_for_queries(
             )
         )
 
-        # persist (NOT localCheckpoint): the n_left count below doubles
-        # as the materializer, saving one job per round — measured 6.7s
+        # persist (NOT localCheckpoint): the aggregate below doubles as
+        # the materializer, saving one job per round — measured 6.7s
         # -> 3.8s for the 100k self-graph at local[32].  Lineage stays
         # intact (rounds are few, plans stay shallow); the cp alias on
         # pts already disambiguates the self-join.  MEMORY_ONLY is
@@ -1813,8 +1813,8 @@ def knn_for_queries(
 
         next_frontier = (
             state.filter(~F.col("is_done"))
-            .withColumn("sx", F.shiftright("qix", _ss))
-            .withColumn("sy", F.shiftright("qiy", _ss))
+            .withColumn("sx", F.shiftright("qix", _SUPER_SHIFT))
+            .withColumn("sy", F.shiftright("qiy", _SUPER_SHIFT))
             .withColumn("r_lo", F.col("r_hi"))
             .withColumn(
                 # Ring jump: lb(R') >= R'*cs, so R' = floor(kth/cs)+1
@@ -1834,25 +1834,17 @@ def knn_for_queries(
                     F.lit(r_max).cast("long"),
                 ),
             )
-            .drop("lb", "is_done")
+            .drop("lb", "is_done", "shipped")
         )
-        n_left = next_frontier.count()
+        # one job per round: materializes the state, counts the queries
+        # left and sums the candidate rows the round shipped
+        tally = state.agg(
+            F.count(F.when(~F.col("is_done"), 1)).alias("left"),
+            F.sum("shipped").alias("shipped"),
+        ).collect()[0]
+        n_left = tally["left"]
+        shipped_rows += int(tally["shipped"] or 0)
         rounds_run = _round + 1
-        if stats_on:
-            # re-runs the uncached candidate join and its inputs: 4-6
-            # extra jobs per call measured, opt-in by construction
-            shipped_rows += cand.count()
-        if debug:
-            # candidate-volume diagnostic (costs one extra job; debug
-            # only): shipped rows / n_points = the replication factor
-            # the annulus trim + khi0 policy control
-            n_cand = cand.count()
-            print(
-                f"[knn round {_round}] left={n_left} cand={n_cand} "
-                f"(x{n_cand / max(ext['n'], 1):.2f} of n) "
-                f"{_time.monotonic() - _t0:.2f}s cs={spec.cell_size:.3g}",
-                flush=True,
-            )
         if n_left == 0:
             break
         # small-frontier fallback: stragglers in sparse regions have
@@ -1872,8 +1864,6 @@ def knn_for_queries(
                 _small_frontier_knn(points, rows, k, extra_cols=extra_cols)
             )
             brute_tail = n_left
-            if debug:
-                print(f"[knn brute] {n_left} stragglers via full scan", flush=True)
             break
         frontier = next_frontier
     else:

@@ -69,14 +69,6 @@ from rindex_spark.operators.knn import _ThreadLocalFrameList
 _last_stats = _ThreadLocalFrameList()
 
 
-def _release_last_stats() -> None:
-    while _last_stats:
-        try:
-            _last_stats.pop().unpersist(blocking=False)
-        except Exception:
-            pass
-
-
 def rknn_stats(
     points: DataFrame,
     graph: DataFrame,
@@ -172,7 +164,7 @@ def reverse_knn(
         return spark.createDataFrame([], "qid long, id long, dist double")
 
     if stats is None:
-        _release_last_stats()
+        _last_stats.release()
         # a per-call handle collects no driver copy: the driver path
         # needs one built once, by the caller's rknn_stats
         handle = rknn_stats(points, graph, k, spec, extra_cols=extra_cols, resident=False)

@@ -55,14 +55,6 @@ from rindex_spark.plans.scan import spread_scan
 _last_input = _ThreadLocalFrameList()
 
 
-def _release_last_input() -> None:
-    while _last_input:
-        try:
-            _last_input.pop().unpersist(blocking=False)
-        except Exception:
-            pass
-
-
 def sample_to_token_budget(
     docs: DataFrame,
     budget: int,
@@ -107,7 +99,7 @@ def sample_to_token_budget(
     # recomputing the (often expensive) input lineage.  MEMORY_AND_DISK
     # — a corpus projection must not silently recompute under memory
     # pressure mid-query; released on the next call (thread-local).
-    _release_last_input()
+    _last_input.release()
     d = (
         spread_scan(docs)
         .withColumn("__bkt", bucket)

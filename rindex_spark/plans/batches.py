@@ -57,8 +57,6 @@ streaming ingest).
 
 from __future__ import annotations
 
-import os
-import time as _time
 from dataclasses import dataclass
 from functools import reduce
 
@@ -326,20 +324,6 @@ def apply_batch(
 
     has_ins = n_inserts > 0
     has_del = n_deletes > 0
-    # per-stage wall-clock profile (RINDEX_DEBUG_TIMING=1; debug only —
-    # the stage marks piggyback on jobs the plan runs anyway, except the
-    # rk_pairs/full_q counts which are query-scale)
-    debug = bool(os.environ.get("RINDEX_DEBUG_TIMING"))
-    _t = _time.monotonic()
-
-    def _mark(label: str) -> None:
-        nonlocal _t
-        if debug:
-            print(
-                f"[apply_batch] {label}: {_time.monotonic() - _t:.2f}s",
-                flush=True,
-            )
-        _t = _time.monotonic()
 
     # 1. fold the point set
     new_points = state.points
@@ -352,7 +336,6 @@ def apply_batch(
     # batch — superlinear slowdown over a long op stream.
     n_part = max(state.points.sparkSession.sparkContext.defaultParallelism, 2)
     new_points = new_points.coalesce(n_part).localCheckpoint(eager=True)
-    _mark("fold_points")
     if spec is None:
         spec = infer_grid(new_points, cfg)
     spark = new_points.sparkSession
@@ -386,7 +369,6 @@ def apply_batch(
             .coalesce(n_part)
             .localCheckpoint(eager=True)
         )
-        _mark("gain_capture (reverse_knn of inserts)")
         gained = rk_pairs.select("src").distinct()
         full_src = lost.unionByName(inserts.select(F.col("id").alias("src"))).distinct()
         merge_src = gained.join(full_src, "src", "left_anti")
@@ -434,7 +416,6 @@ def apply_batch(
         .localCheckpoint(eager=True)
     )
     n_affected = full_q.count()
-    _mark(f"affected_set (n={n_affected})")
     if extent is not None:
         folded_ext = {
             "n": int(extent["n"]) + n_inserts - n_deletes,
@@ -470,9 +451,6 @@ def apply_batch(
             extent=folded_ext, queries_within_extent=True,
         ).select(F.col("qid").alias("src"), F.col("id").alias("dst"), "dist", "rank")
         parts.append(recomputed)
-        if debug:
-            recomputed.count()
-            _mark("ring_recompute")
 
     new_graph = untouched.select("src", "dst", "dist", "rank")
     for p in parts:

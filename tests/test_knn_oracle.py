@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from rindex_spark.config import EngineConfig, GridSpec
 from rindex_spark.grid import infer_grid
+from rindex_spark.operators import knn as knn_mod
 from rindex_spark.operators.knn import build_knn_graph, knn_for_queries
 from rindex_spark.operators.range_query import range_join
 from rindex_spark.operators.rknn import reverse_knn
@@ -310,12 +311,11 @@ def test_knn_queries_far_outside_extent(spark):
 
 def test_single_bucket_cogroup_exact(spark, monkeypatch):
     """Adversarial grouping: force EVERY supercell subgroup into one
-    cogroup bucket (RINDEX_KNN_BUCKETS=1).  The kernel's sorted
-    single-key subgroup slicing (and the packed-gk superset-merge
-    argument) must keep results exact under maximal collision."""
-    import os
-
-    monkeypatch.setitem(os.environ, "RINDEX_KNN_BUCKETS", "1")
+    cogroup bucket.  The kernel's sorted single-key subgroup slicing
+    (and the packed-gk superset-merge argument) must keep results exact
+    under maximal collision."""
+    monkeypatch.setattr(knn_mod, "_MIN_BUCKETS", 1)
+    monkeypatch.setattr(knn_mod, "_BUCKETS_PER_CORE", 0)
     rng = np.random.default_rng(29)
     coords = np.concatenate(
         [

@@ -21,9 +21,9 @@ import pytest
 from pyspark.sql import Row
 
 from rindex_spark.operators import knn as knn_mod
-from rindex_spark.operators.knn import knn_for_queries
+from rindex_spark.operators.knn import build_knn_graph, knn_for_queries
 
-from tests.conftest import brute_knn_queries, count_jobs
+from tests.conftest import brute_knn, brute_knn_queries, count_jobs
 
 
 def _points(spark, xy, ids=None, extra=None):
@@ -223,8 +223,8 @@ def test_resident_no_stale_reads(spark, tmp_path):
 
 
 def test_resident_call_writes_zero_stats(spark, monkeypatch):
-    """A hooked call on the resident path reports no ring round instead
-    of the previous call's figures."""
+    """A call on the resident path reports no ring round instead of the
+    previous call's figures."""
     rng = np.random.default_rng(17)
     xy = rng.uniform(-50.0, 50.0, size=(700, 2))
     pts = _points(spark, xy)
@@ -233,7 +233,6 @@ def test_resident_call_writes_zero_stats(spark, monkeypatch):
     # the budget leaves room for 8 query rows beside the points: the
     # larger batch takes the ring path
     monkeypatch.setattr(knn_mod, "_RESIDENT_MAX_BYTES", knn_mod.resident_bytes(700 + 8))
-    monkeypatch.setitem(os.environ, "RINDEX_KNN_STATS", "1")
     knn_mod.last_run_stats.clear()
     knn_for_queries(pts, big_q, 4).count()
     assert knn_mod.last_run_stats["rounds"] >= 1
@@ -246,6 +245,56 @@ def test_resident_call_writes_zero_stats(spark, monkeypatch):
         "replication": 0.0,
         "brute_tail_queries": 0,
     }
+
+
+def test_ring_self_graph_records_stats_without_env(spark, monkeypatch):
+    """The ring path records its stats on every call, with no switch: a
+    self graph ships every point to its own group in round 0."""
+    for name in [n for n in os.environ if n.startswith("RINDEX_")]:
+        monkeypatch.delenv(name)
+    rng = np.random.default_rng(41)
+    xy = rng.uniform(-50.0, 50.0, size=(400, 2))
+    knn_mod.last_run_stats.clear()
+    assert build_knn_graph(_points(spark, xy), 5).count() == 400 * 5
+    st = knn_mod.last_run_stats
+    assert st["rounds"] >= 1 and st["n_points"] == 400
+    assert st["shipped_rows"] >= 400
+    assert st["replication"] == round(st["shipped_rows"] / 400, 3)
+
+
+@pytest.mark.parametrize("bad", [float("nan"), float("inf")])
+def test_non_finite_points_are_dropped(spark, monkeypatch, bad):
+    """A point with a NaN or infinite coordinate has no distance: both
+    paths answer from the other points, and in a self graph it gets no
+    rows and is nobody's neighbour."""
+    rng = np.random.default_rng(31)
+    xy = rng.uniform(-20.0, 20.0, size=(60, 2))
+    xy[7, 0] = bad
+    xy[23, 1] = -bad
+    ok = np.flatnonzero(np.isfinite(xy).all(axis=1))
+    pts = _points(spark, xy)
+    qxy = rng.uniform(-25.0, 25.0, size=(12, 2))
+    k = 4
+    resident, ring = _both_paths(monkeypatch, pts, _queries(spark, qxy), k)
+    assert resident == ring
+    _check_brute(resident, qxy, xy[ok], ok, k)
+    graph: dict[int, list] = {}
+    for r in build_knn_graph(pts, k).collect():
+        graph.setdefault(r["src"], []).append((r["rank"], r["dist"], r["dst"]))
+    exp = brute_knn(xy[ok], ok, k)
+    assert set(graph) == set(exp)
+    for src, rows in graph.items():
+        assert [(d, i) for _, d, i in sorted(rows)] == exp[src]
+
+
+def test_resident_index_drops_non_finite_extra_coordinate():
+    """The driver copy drops a point whose extra coordinate is NaN."""
+    xs = np.array([0.0, 1.0, 2.0, 3.0, 4.0])
+    es = np.array([[0.0], [0.0], [np.nan], [0.0], [np.inf]])
+    index = knn_mod._ResidentIndex(np.arange(5), xs, np.zeros(5), es, ("z",))
+    assert index.n == 3
+    cols = index.knn(np.array([0]), np.array([2.0]), np.array([0.0]), np.array([[0.0]]), 5)
+    assert cols["id"].tolist() == [1, 3, 0]
 
 
 def test_carried_bounds_fields_missing_and_null(spark):

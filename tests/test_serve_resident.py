@@ -16,8 +16,6 @@ reverse-kNN batches answered from the resident copy of the points.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 
@@ -148,7 +146,6 @@ def test_query_collect_is_bounded_by_bytes_and_work(spark, monkeypatch):
     n_q = 40
     qxy = rng.uniform(-55.0, 55.0, size=(n_q + 1, 2))
     fits, over = _queries(spark, qxy[:n_q]), _queries(spark, qxy)
-    monkeypatch.setitem(os.environ, "RINDEX_KNN_STATS", "1")
 
     def rounds(q):
         rows = _rows(knn_for_queries(pts, q, 5))
