@@ -54,16 +54,15 @@ from __future__ import annotations
 import os
 import threading
 import weakref
-from functools import reduce
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from rindex_spark.config import EngineConfig, GridSpec
-from rindex_spark.grid import ring_lower_bound, with_cells
+from rindex_spark.grid import all_finite, ring_lower_bound, with_cells
 
 # Supercell side in grid cells (S = _SUPER): 4x4, measured in r6
 # against the earlier 8x8.  The kernel computes the FULL query x
@@ -117,6 +116,7 @@ _MIN_BUCKETS = 64
 _BUCKETS_PER_CORE = 16
 
 _OUT_SCHEMA = "qid long, id long, dist double, rank int"
+_GRAPH_SCHEMA = "src long, dst long, dist double, rank int"
 
 # ``shipped``: the candidate rows of the row's cogroup call on its first
 # row, 0 on the others — summed by the round's one aggregate, so the
@@ -784,16 +784,17 @@ def _unpack_best(batches):
 
 
 # --------------------------------------------------------------------------
-# Resident serving path: query batches answered on the driver from a
-# cell-sorted copy of the points, with no ring round and no Spark job
-# over the points once the copy is held (GeoBlocks, EDBT 2021: answer
+# Resident serving path: query batches and small self graphs answered on
+# the driver from a cell-sorted copy of the points, with no ring round and
+# no Spark job over the points once the copy is held (GeoBlocks, EDBT 2021: answer
 # queries from a compact cell-ordered structure; Cache-Efficient Top-k
 # Aggregation, VLDB 2023: one candidate gather and top-k merge per cell
 # group instead of per query).
 
 # A point set whose (id, x, y, *extra_cols) values fit this many bytes
-# (8 per value: 48 MiB ~ 2.1M 2-D points; a committed state's graph rows
-# count too, see resident_bytes) is small enough to hold on the driver.
+# (8 per value: 48 MiB ~ 2.1M 2-D points; a committed state's or a built
+# self graph's rows count too, see resident_bytes) is small enough to hold
+# on the driver.
 # Known from the extent's n, so the gate costs no job.
 _RESIDENT_MAX_BYTES = 48 << 20
 # Most kNN queries one call answers on the driver, whether a query batch
@@ -813,6 +814,20 @@ _RESIDENT_MAX_BYTES = 48 << 20
 # outgrow its state, which the byte budget caps near 165k points at
 # k = 10, so for folds the budget is the binding limit.
 _DRIVER_MAX_REDO = 200_000
+# Most points whose self graph build_knn_graph builds on the driver (the
+# byte budget, counting the n * k graph rows, binds first above k = 35).
+# Measured: build_knn_graph(...).write.parquet of a persisted frame of
+# clustered Cities points, k = 10, 4 vCPU, median of 3 alternating runs,
+# driver / ring path (ring forced by a byte budget of 0):
+#   local[2]: 20k 1.47 / 4.20 s; 50k 4.03 / 5.22; 100k 7.34 / 7.72;
+#             165k 12.42 / 15.56;
+#   local[4]: 20k 1.45 / 3.91; 50k 3.66 / 4.74; 75k 5.87 / 5.58;
+#             100k 7.47 / 6.55 (7.35 / 6.99 in another set);
+#             165k 17.84 / 18.30.
+# At 100k the driver's kernel (one core) takes ~4.4 s and the write of its
+# 1M rows ~2.7 s; the ring rounds use every core, so at local[4] they
+# catch up by 75k.  The gate sits below that size.
+_GRAPH_MAX_POINTS = 50_000
 # The ring loop always hands a straggler set of at most this many
 # queries to the brute tail, whatever its flop gate says.
 _SMALL_BATCH = 512
@@ -931,10 +946,17 @@ class _ResidentIndex:
             self.kd_reach = float(finite.max()) if len(finite) else -np.inf
 
     @classmethod
-    def collect(cls, points: DataFrame, extra_cols: tuple) -> "_ResidentIndex":
-        """One scan job."""
+    def collect(
+        cls, points: DataFrame, extra_cols: tuple, limit: int | None = None
+    ) -> "_ResidentIndex | None":
+        """One scan job.  With ``limit``, at most ``limit`` + 1 rows are
+        collected (``_collect_queries``), and more than ``limit`` give
+        None."""
         cols = ("id", "x", "y", *extra_cols)
-        return cls.from_table(points.select(*cols).toArrow(), extra_cols)
+        if limit is None:
+            return cls.from_table(points.select(*cols).toArrow(), extra_cols)
+        tbl = _collect_queries(points, cols, limit + 1)
+        return cls.from_table(tbl, extra_cols) if tbl.num_rows <= limit else None
 
     @classmethod
     def from_table(cls, tbl, extra_cols: tuple, knn_dist: str | None = None) -> "_ResidentIndex":
@@ -1337,12 +1359,17 @@ def drop_copies(path: str) -> None:
                 del _registered[frame]
 
 
-def _resident_index(points: DataFrame, extra_cols: tuple, collect: bool = True):
+def _resident_index(
+    points: DataFrame, extra_cols: tuple, collect: bool = True, limit: int | None = None
+):
     """The driver copy of ``points``: built from its registered table, or
     held across calls for a persisted frame, or collected afresh (one
     scan job) for any other — a frame that is not persisted may be
     re-read from changed files, so it is never held.  With ``collect``
-    False, a copy that is not held already is None instead: no job."""
+    False, a copy that is not held already is None instead: no job.
+    With ``limit``, the collect is bounded (``_ResidentIndex.collect``),
+    and a frame of more rows gets None and no copy is held; a copy
+    already held is returned whatever its size."""
     with _resident_lock:
         reg = _registered.get(points)
         # registered tables are 2-D states (id, x, y)
@@ -1354,13 +1381,17 @@ def _resident_index(points: DataFrame, extra_cols: tuple, collect: bool = True):
     if token is None:
         with _resident_lock:
             _resident.pop(points, None)
-        return _ResidentIndex.collect(points, extra_cols) if collect else None
+        return _ResidentIndex.collect(points, extra_cols, limit) if collect else None
     with _resident_lock:
         held = _resident.get(points)
         if held is None or held[0] != token or held[1].extra_cols != extra_cols:
             if not collect:
                 return None
-            held = (token, _ResidentIndex.collect(points, extra_cols))
+            index = _ResidentIndex.collect(points, extra_cols, limit)
+            if index is None:
+                _resident.pop(points, None)
+                return None
+            held = (token, index)
             _resident[points] = held
         return held[1]
 
@@ -1447,12 +1478,6 @@ def pairs_frame(spark, qid: np.ndarray, index: _ResidentIndex, pairs) -> DataFra
     return spark.createDataFrame(pa.table({"qid": qq[o], "id": ii[o], "dist": d[o]}))
 
 
-def _all_finite(cols) -> Column:
-    """True where every column of ``cols`` is finite: abs(NaN) < inf is
-    false in Spark, and a null compares to null, which a filter drops."""
-    return reduce(lambda a, b: a & b, [F.abs(F.col(c)) < F.lit(float("inf")) for c in cols])
-
-
 def _resident_knn(points: DataFrame, qtbl, k: int, extra_cols: tuple) -> DataFrame:
     """knn_for_queries' driver path: answer the collected query batch (an
     Arrow table of qid, x, y, *extra_cols) on the driver; the result is a
@@ -1536,13 +1561,15 @@ def knn_for_queries(
     (the query collect) plus whatever consumes the result.  A frame that
     is neither registered nor persisted may be re-read from changed
     files, so it is never held: each call collects it in one scan job.
-    Batches over either bound, point sets over the budget, the self
-    graph (``build_knn_graph``) and the distributed repair of
-    ``apply_batch`` (``queries_within_extent=True``) keep the ring
-    rounds; a batch over the bounds from a query frame that is not
-    driver-local pays the collect job on top.  On both paths a query
-    with a null qid, or a null, NaN or infinite coordinate, gets no
-    rows.
+    ``build_knn_graph`` uses the same copy for an in-budget self graph
+    (and holds the one it collects for a persisted frame).  Batches over
+    either bound, point sets over the budget, self graphs over their
+    gate and the distributed repair of ``apply_batch`` (the last two with
+    ``queries_within_extent=True``) keep the ring rounds; a batch over
+    the bounds from a query frame that is not driver-local pays the
+    collect job on top.  On both paths a query with a null qid, or a
+    null, NaN or infinite coordinate, gets no rows, and a point with a
+    null id, or such a coordinate, is nobody's neighbour.
     """
     extra_cols = tuple(extra_cols)
     n_extra = len(extra_cols)
@@ -1554,14 +1581,19 @@ def knn_for_queries(
         return spark.createDataFrame([], _OUT_SCHEMA)
     cfg = cfg or EngineConfig(k=k)
 
-    # a point with a null, NaN or infinite coordinate has no distance:
-    # the ring path drops it before the extent (the driver copy drops it
-    # too), so it is nobody's neighbour and, in a self graph, gets no
-    # rows.  The filter is built only where it is used: a resident call
-    # with a given extent pays no plan analysis for it.
+    # a point with a null, NaN or infinite coordinate has no distance,
+    # and one with a null id names no neighbour: the ring path drops both
+    # before the extent (the driver copy drops them too), so such a point
+    # is nobody's neighbour and, in a self graph, gets no rows.  The
+    # filter is built only where it is used: a resident call with a given
+    # extent pays no plan analysis for it.
     coords = ("x", "y", *extra_cols)
+
+    def valid(df, id_col):
+        return df.filter(all_finite(coords) & F.col(id_col).isNotNull())
+
     # one aggregate job yields both the grid spec and the extent
-    ext = extent if extent is not None else points.filter(_all_finite(coords)).agg(
+    ext = extent if extent is not None else valid(points, "id").agg(
         F.count(F.lit(1)).alias("n"),
         F.min("x").alias("xmin"),
         F.max("x").alias("xmax"),
@@ -1578,11 +1610,11 @@ def knn_for_queries(
             qtbl = _collect_queries(queries, qcols, limit + 1)
             if qtbl.num_rows <= limit:
                 return _resident_knn(points, qtbl, k, extra_cols)
-    points = points.filter(_all_finite(coords))
+    points = valid(points, "id")
     # a query with a null qid names no query, and one with a null, NaN or
     # infinite coordinate has no distance: neither gets rows, as on the
     # driver path
-    queries = queries.filter(_all_finite(coords) & F.col("qid").isNotNull())
+    queries = valid(queries, "qid")
     if spec is None:
         from rindex_spark.grid import grid_from_extent, shrink_to_occupancy
 
@@ -1880,6 +1912,38 @@ def knn_for_queries(
     return out.coalesce(max(spark.sparkContext.defaultParallelism, 2))
 
 
+def _graph_limit(k: int, n_extra: int) -> int:
+    """Most points whose self graph is built on the driver: the copy and
+    its n * k graph rows fit ``_RESIDENT_MAX_BYTES`` (``fits_resident``;
+    ~165k 2-D points at k = 10), and at most ``_GRAPH_MAX_POINTS``."""
+    return min(_RESIDENT_MAX_BYTES // resident_bytes(1, k, n_extra), _GRAPH_MAX_POINTS)
+
+
+def _resident_graph(points: DataFrame, k: int, extra_cols: tuple, extent) -> DataFrame | None:
+    """build_knn_graph's driver path: every point's row of the graph from
+    ``_ResidentIndex.knn`` over the driver copy, as a local frame, or None
+    when the point set is past ``_graph_limit``.  A held copy costs no
+    job; otherwise at most the limit plus one row is collected in one
+    job."""
+    import pyarrow as pa
+
+    limit = _graph_limit(k, len(extra_cols))
+    if not limit or (extent is not None and not 0 < extent["n"] <= limit):
+        return None
+    index = _resident_index(points, extra_cols, limit=limit)
+    if index is None or index.n > limit:
+        return None
+    _record_stats(0, 0, index.n, 0)
+    spark = points.sparkSession
+    # an empty copy holds no coordinate arrays
+    cols = index.knn(index.ids, index.xs, index.ys, index.es, k) if index.n else None
+    if cols is None:
+        return spark.createDataFrame([], _GRAPH_SCHEMA)
+    return spark.createDataFrame(
+        pa.table({"src": cols["qid"], "dst": cols["id"], "dist": cols["dist"], "rank": cols["rank"]})
+    )
+
+
 def build_knn_graph(
     points: DataFrame,
     k: int,
@@ -1895,7 +1959,29 @@ def build_knn_graph(
     self-loops, demo/data/knn.csv:1).
 
     returns: (src long, dst long, dist double, rank int)
+
+    Built on the driver.  A point set whose copy and n * k graph rows fit
+    ``_RESIDENT_MAX_BYTES`` (``fits_resident``: ~165k 2-D points at
+    k = 10) and of at most ``_GRAPH_MAX_POINTS`` (50,000, below the
+    measured crossover with the ring path) points is answered from
+    the driver copy (``_ResidentIndex.knn``, the batched kernel that
+    serves ``knn_for_queries``' batches; rows bit-identical to the ring
+    path) and returned as a local DataFrame, with zero stats and no ring
+    round.  ``extent``'s n, when given, decides the gate with no job.
+    The copy is found as ``knn_for_queries`` finds it: a registered table
+    or a persisted frame's held copy costs no job; otherwise at most the
+    gate's size plus one row is collected in one job, and a frame that
+    proves larger goes to the ring path.  A persisted frame's collected
+    copy is held, so a later ``knn_for_queries`` on it collects no
+    points.  Larger sets run the ring rounds of ``knn_for_queries``.  On
+    both paths a point with a null id, or a null, NaN or infinite
+    coordinate, gets no rows and is nobody's neighbour.
     """
+    extra_cols = tuple(extra_cols)
+    if k > 0:
+        graph = _resident_graph(points, k, extra_cols, extent)
+        if graph is not None:
+            return graph
     queries = points.select(F.col("id").alias("qid"), "x", "y", *extra_cols)
     g = knn_for_queries(
         points, queries, k, spec=spec, cfg=cfg,

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import contextlib
+
 import numpy as np
 import pytest
 from pyspark.sql import SparkSession
@@ -33,6 +35,22 @@ def count_jobs(spark, fn):
         info = tracker.getJobInfo(j)
         tasks.append([tracker.getStageInfo(s).numTasks for s in info.stageIds])
     return out, tasks
+
+
+# build_knn_graph's two paths: the driver kernel for an in-budget point
+# set, and the ring rounds, forced by a driver byte budget of 0
+GRAPH_PATHS = ("driver", "ring")
+
+
+@contextlib.contextmanager
+def graph_path(monkeypatch, path: str):
+    """Run the body with build_knn_graph on ``path`` (one of GRAPH_PATHS)."""
+    from rindex_spark.operators import knn as knn_mod
+
+    with monkeypatch.context() as m:
+        if path == "ring":
+            m.setattr(knn_mod, "_RESIDENT_MAX_BYTES", 0)
+        yield
 
 
 def brute_knn(coords: np.ndarray, ids: np.ndarray, k: int):

@@ -11,6 +11,8 @@ from pyspark.sql import functions as F
 
 from rindex_spark.operators.knn import build_knn_graph, knn_for_queries
 
+from tests.conftest import GRAPH_PATHS, graph_path
+
 
 def _pts3(n, seed=5, spread=60.0):
     rng = np.random.default_rng(seed)
@@ -31,26 +33,28 @@ def _brute3(qxyz, pxyz, pids, k):
     return out
 
 
-def test_knn_3d_graph_exact(spark):
+def test_knn_3d_graph_exact(spark, monkeypatch):
     k = 6
     ids, xyz = _pts3(800)
     df = spark.createDataFrame(
         [(int(i), float(p[0]), float(p[1]), float(p[2])) for i, p in zip(ids, xyz)],
         "id long, x double, y double, z double",
     )
-    g = build_knn_graph(df, k, extra_cols=("z",)).collect()
-    got: dict[int, list] = {}
-    for r in g:
-        got.setdefault(r["src"], []).append((r["rank"], r["dist"], r["dst"]))
     oracle = _brute3(xyz, xyz, ids, k)
-    assert len(got) == len(ids)
-    for i, exp in zip(ids, oracle):
-        rows = sorted(got[int(i)])
-        assert len(rows) == k
-        # self at rank 1, dist 0.0 (reference invariant rindex.rs:481)
-        assert rows[0] == (1, 0.0, int(i))
-        for (rk, d, dst), (ed, eid) in zip(rows, exp):
-            assert d == ed and dst == eid, (i, rk, d, dst, ed, eid)
+    for path in GRAPH_PATHS:
+        with graph_path(monkeypatch, path):
+            g = build_knn_graph(df, k, extra_cols=("z",)).collect()
+        got: dict[int, list] = {}
+        for r in g:
+            got.setdefault(r["src"], []).append((r["rank"], r["dist"], r["dst"]))
+        assert len(got) == len(ids), path
+        for i, exp in zip(ids, oracle):
+            rows = sorted(got[int(i)])
+            assert len(rows) == k
+            # self at rank 1, dist 0.0 (reference invariant rindex.rs:481)
+            assert rows[0] == (1, 0.0, int(i))
+            for (rk, d, dst), (ed, eid) in zip(rows, exp):
+                assert d == ed and dst == eid, (path, i, rk, d, dst, ed, eid)
 
 
 def test_knn_3d_external_queries(spark):

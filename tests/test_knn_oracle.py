@@ -26,7 +26,7 @@ from rindex_spark.operators.range_query import range_join
 from rindex_spark.operators.rknn import reverse_knn
 from rindex_spark.operators.stats import knn_dist
 
-from tests.conftest import brute_knn, count_jobs
+from tests.conftest import GRAPH_PATHS, brute_knn, count_jobs, graph_path
 
 
 def make_points(spark, coords, ids=None):
@@ -56,7 +56,7 @@ def check_graph_vs_oracle(graph_rows, oracle, tol=1e-9):
 
 
 @pytest.mark.parametrize("dist_kind", ["uniform", "clustered"])
-def test_knn_graph_vs_bruteforce(spark, dist_kind):
+def test_knn_graph_vs_bruteforce(spark, monkeypatch, dist_kind):
     rng = np.random.default_rng(0)
     if dist_kind == "uniform":
         # matches the reference's randomized workload domain
@@ -72,24 +72,33 @@ def test_knn_graph_vs_bruteforce(spark, dist_kind):
         coords = np.concatenate(cs)
     k = 10
     pts = make_points(spark, coords).cache()
-    graph = build_knn_graph(pts, k)
     oracle = brute_knn(coords, np.arange(len(coords)), k)
-    check_graph_vs_oracle(graph.collect(), oracle)
+    for path in GRAPH_PATHS:
+        with graph_path(monkeypatch, path):
+            check_graph_vs_oracle(build_knn_graph(pts, k).collect(), oracle)
 
 
-def test_knn_graph_with_duplicate_points(spark):
+def test_knn_graph_with_duplicate_points(spark, monkeypatch):
     # duplicate coordinates: distance ties at 0.0; identity is positional
     # in the reference (index.rs slot ids) — ours is the id column.
     coords = [(1.0, 1.0), (1.0, 1.0), (1.0, 1.0), (5.0, 5.0)]
     pts = make_points(spark, coords)
-    graph = build_knn_graph(pts, 2, spec=GridSpec(cell_size=1.0))
-    rows = graph.filter("src = 1").orderBy("rank").collect()
-    # rank 1 must be dist 0.0 (self or co-located twin — tie broken by id)
-    assert rows[0]["dist"] == 0.0 and rows[1]["dist"] == 0.0
-    assert {r["dst"] for r in rows} <= {0, 1, 2}
+    for path in GRAPH_PATHS:
+        with graph_path(monkeypatch, path):
+            graph = build_knn_graph(pts, 2, spec=GridSpec(cell_size=1.0))
+            rows = graph.filter("src = 1").orderBy("rank").collect()
+        # rank 1 must be dist 0.0 (self or co-located twin — tie broken by id)
+        assert rows[0]["dist"] == 0.0 and rows[1]["dist"] == 0.0, path
+        assert {r["dst"] for r in rows} <= {0, 1, 2}, path
 
 
-def test_vertical_line_knn_dist(spark):
+def test_vertical_line_knn_dist(spark, monkeypatch):
+    for path in GRAPH_PATHS:
+        with graph_path(monkeypatch, path):
+            _check_vertical_line_knn_dist(spark)
+
+
+def _check_vertical_line_knn_dist(spark):
     # rindex.rs:993-1030, k=5 (includes self)
     k = 5
     pts5 = make_points(spark, [(0.0, 1.0), (0.0, 2.0), (0.0, 3.0), (0.0, 4.0), (0.0, 5.0)])
@@ -261,12 +270,15 @@ def test_range_join_extent_param_zero_jobs_same_result(spark):
     assert got == legacy and len(got) > 0
 
 
-def test_knn_round_states_released_across_calls(spark):
+def test_knn_round_states_released_across_calls(spark, monkeypatch):
     """r3 verdict item 7: repeated build_knn_graph calls must not
     accumulate persisted round states — each call frees its
     predecessor's, and release_round_states() returns the persisted-RDD
-    count to baseline."""
+    count to baseline.  Round states belong to the ring path, which a
+    driver byte budget of 0 forces."""
     from rindex_spark.operators import knn as knn_mod
+
+    monkeypatch.setattr(knn_mod, "_RESIDENT_MAX_BYTES", 0)
 
     rng = np.random.default_rng(29)
     coords = rng.uniform(-50.0, 50.0, size=(300, 2))
@@ -345,15 +357,18 @@ def test_asymmetric_extent_grid(spark):
     check_graph_vs_oracle(graph.collect(), oracle)
 
 
-def test_knn_concurrent_driver_threads_isolated_states(spark):
+def test_knn_concurrent_driver_threads_isolated_states(spark, monkeypatch):
     """r4 verdict item 7: two driver threads running interleaved
     build_knn_graph calls must not release each other's live round
     states — the registry is thread-local, so each thread's slot holds
     only its own call's frames, storage stays flat per thread, and
-    both results remain exact."""
+    both results remain exact.  Round states belong to the ring path,
+    which a driver byte budget of 0 forces."""
     import threading
 
     from rindex_spark.operators import knn as knn_mod
+
+    monkeypatch.setattr(knn_mod, "_RESIDENT_MAX_BYTES", 0)
 
     rng = np.random.default_rng(31)
     coords = rng.uniform(-50.0, 50.0, size=(400, 2))

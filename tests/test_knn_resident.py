@@ -1,5 +1,6 @@
 """knn_for_queries' resident serving path: small query batches answered
-on the driver from a cell-sorted copy of the points.
+on the driver from a cell-sorted copy of the points; build_knn_graph's
+driver path over the same copy.
 
 * parity — the resident path and the ring-round path (forced by setting
   the byte budget to 0) return identical (qid, id, dist, rank) rows;
@@ -20,6 +21,8 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import Row
 
+from rindex_spark.config import EngineConfig
+from rindex_spark.grid import grid_and_extent
 from rindex_spark.operators import knn as knn_mod
 from rindex_spark.operators.knn import build_knn_graph, knn_for_queries
 
@@ -252,6 +255,8 @@ def test_ring_self_graph_records_stats_without_env(spark, monkeypatch):
     self graph ships every point to its own group in round 0."""
     for name in [n for n in os.environ if n.startswith("RINDEX_")]:
         monkeypatch.delenv(name)
+    # a point set this small is built on the driver; force the ring path
+    monkeypatch.setattr(knn_mod, "_RESIDENT_MAX_BYTES", 0)
     rng = np.random.default_rng(41)
     xy = rng.uniform(-50.0, 50.0, size=(400, 2))
     knn_mod.last_run_stats.clear()
@@ -285,6 +290,161 @@ def test_non_finite_points_are_dropped(spark, monkeypatch, bad):
     assert set(graph) == set(exp)
     for src, rows in graph.items():
         assert [(d, i) for _, d, i in sorted(rows)] == exp[src]
+
+
+def _graph_rows(df):
+    return sorted((r["src"], r["dst"], r["dist"], r["rank"]) for r in df.collect())
+
+
+def _graph_both_paths(monkeypatch, points, k, **kw):
+    """(driver rows, ring rows) of build_knn_graph; the driver call must
+    run no ring round."""
+    knn_mod.last_run_stats.clear()
+    driver = _graph_rows(build_knn_graph(points, k, **kw))
+    assert knn_mod.last_run_stats["rounds"] == 0
+    with monkeypatch.context() as m:
+        m.setattr(knn_mod, "_RESIDENT_MAX_BYTES", 0)
+        ring = _graph_rows(build_knn_graph(points, k, **kw))
+    return driver, ring
+
+
+def _line_with_null_id(spark):
+    """10 points on a line and a point with a null id between two of them."""
+    rows = [(i, float(i), 0.0) for i in range(10)] + [(None, 2.2, 0.0)]
+    return spark.createDataFrame(rows, "id long, x double, y double")
+
+
+def _graph_case(spark, case):
+    """(points frame, k, build kwargs, valid xy or None, valid ids)."""
+    rng = np.random.default_rng(43)
+    if case == "lattice_ties":
+        xy = np.array([(x, y) for x in range(9) for y in range(7)], dtype=np.float64)
+        return _points(spark, xy), 9, {}, xy, np.arange(len(xy))
+    if case == "duplicates":
+        g = np.array([(x, y) for x in range(6) for y in range(6)], dtype=np.float64)
+        xy = np.concatenate([g, g, g[:5]])
+        ids = np.arange(len(xy))[::-1].copy()
+        return _points(spark, xy, ids), 4, {}, xy, ids
+    if case == "extra_cols_3d":
+        xyz = rng.uniform(-30.0, 30.0, size=(300, 3))
+        xyz[:80] = rng.normal(4.0, 1.5, size=(80, 3))
+        return _points(spark, xyz[:, :2], extra=xyz[:, 2:]), 5, {"extra_cols": ("z",)}, None, None
+    if case == "k_ge_n":
+        xy = rng.uniform(0.0, 10.0, size=(6, 2))
+        return _points(spark, xy), 10, {}, xy, np.arange(6)
+    if case == "k_zero":
+        return _points(spark, rng.uniform(0.0, 10.0, size=(6, 2))), 0, {}, None, None
+    if case == "empty":
+        return spark.createDataFrame([], "id long, x double, y double"), 3, {}, None, None
+    if case == "null_id":
+        xy = np.array([(float(i), 0.0) for i in range(10)])
+        return _line_with_null_id(spark), 3, {}, xy, np.arange(10)
+    # a NaN or infinite coordinate
+    bad = float(case[len("non_finite_"):])
+    xy = rng.uniform(-20.0, 20.0, size=(80, 2))
+    xy[7, 0] = bad
+    xy[31, 1] = -bad
+    ok = np.flatnonzero(np.isfinite(xy).all(axis=1))
+    return _points(spark, xy), 4, {}, xy[ok], ok
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        "lattice_ties", "duplicates", "extra_cols_3d", "k_ge_n", "k_zero", "empty",
+        "null_id", "non_finite_nan", "non_finite_inf",
+    ],
+)
+def test_self_graph_driver_rows_equal_ring_rows(spark, monkeypatch, case):
+    """build_knn_graph's driver path returns the ring path's rows bit for
+    bit; a point with a null id or a non-finite coordinate gets no rows
+    and is nobody's neighbour on either path."""
+    pts, k, kw, xy, ids = _graph_case(spark, case)
+    driver, ring = _graph_both_paths(monkeypatch, pts, k, **kw)
+    assert driver == ring
+    if case in ("k_zero", "empty"):
+        assert driver == []
+    if xy is not None:
+        exp = brute_knn(xy, ids, k)
+        got: dict[int, list] = {}
+        for src, dst, d, rank in driver:
+            got.setdefault(src, []).append((rank, d, dst))
+        assert set(got) == set(exp)
+        for src, rows in got.items():
+            assert [(d, i) for _, d, i in sorted(rows)] == exp[src]
+
+
+def test_ring_query_ignores_null_id_point(spark, monkeypatch):
+    """An external query on the ring path never names a null-id point as a
+    neighbour (it used to come back as id -2^63)."""
+    monkeypatch.setattr(knn_mod, "_RESIDENT_MAX_BYTES", 0)
+    pts = _line_with_null_id(spark)
+    rows = _rows(knn_for_queries(pts, _queries(spark, [(2.1, 0.0)]), 3))
+    xy = np.array([(float(i), 0.0) for i in range(10)])
+    _check_brute(rows, [(2.1, 0.0)], xy, np.arange(10), 3)
+
+
+def test_self_graph_one_past_the_gate_takes_the_ring(spark, monkeypatch):
+    """A point set one past _GRAPH_MAX_POINTS runs the ring rounds and gives
+    the driver path's rows, whether its size comes from extent= or from
+    the bounded collect; at the bound it stays on the driver."""
+    rng = np.random.default_rng(47)
+    xy = rng.uniform(-40.0, 40.0, size=(300, 2))
+    pts = _points(spark, xy)
+    k = 6
+    _, ext = grid_and_extent(pts, EngineConfig(k=k))
+    driver = _graph_rows(build_knn_graph(pts, k))
+    for kw in ({}, {"extent": ext}):
+        for bound, rounds in ((300, 0), (299, 1)):
+            monkeypatch.setattr(knn_mod, "_GRAPH_MAX_POINTS", bound)
+            knn_mod.last_run_stats.clear()
+            assert _graph_rows(build_knn_graph(pts, k, **kw)) == driver
+            assert min(knn_mod.last_run_stats["rounds"], 1) == rounds, (kw, bound)
+
+
+def test_self_graph_jobs(spark):
+    """On a persisted in-budget frame a build plus its toArrow runs the
+    bounded collect and the toArrow; with the copy held (the first build
+    holds it) a build with extent= runs only the toArrow, and so does a
+    following knn_for_queries.  The points sit in 7 partitions, so a scan
+    of them is a 7-task stage."""
+    import pandas as pd
+
+    rng = np.random.default_rng(53)
+    xy = rng.uniform(-50.0, 50.0, size=(2000, 2))
+    pts = _points(spark, xy).repartition(7).persist()
+    ext = {"n": pts.count()}
+    k = 5
+    exp = brute_knn(xy, np.arange(2000), k)
+
+    def check(tbl):
+        got: dict[int, list] = {}
+        for src, dst, d, rank in zip(*(tbl.column(c).to_pylist() for c in ("src", "dst", "dist", "rank"))):
+            got.setdefault(src, []).append((rank, d, dst))
+        assert {s: [(d, i) for _, d, i in sorted(r)] for s, r in got.items()} == exp
+
+    tbl, jobs = count_jobs(spark, lambda: build_knn_graph(pts, k).toArrow())
+    assert len(jobs) <= 2, jobs
+    check(tbl)
+    assert pts in knn_mod._resident
+    tbl, jobs = count_jobs(spark, lambda: build_knn_graph(pts, k, extent=ext).toArrow())
+    assert len(jobs) <= 1 and not any(7 in stages for stages in jobs), jobs
+    check(tbl)
+    qxy = rng.uniform(-60.0, 60.0, size=(16, 2))
+    q = spark.createDataFrame(pd.DataFrame({"qid": np.arange(16), "x": qxy[:, 0], "y": qxy[:, 1]}))
+    out, jobs = count_jobs(spark, lambda: knn_for_queries(pts, q, k, extent=ext).toArrow())
+    assert len(jobs) <= 1 and not any(7 in stages for stages in jobs), jobs
+    got = [tuple(r.values()) for r in out.to_pylist()]
+    _check_brute(got, qxy, xy, np.arange(2000), k)
+    pts.unpersist()
+
+    # a fresh persisted frame with extent=: one scan job for the copy
+    pts = _points(spark, xy).repartition(7).persist()
+    pts.count()
+    tbl, jobs = count_jobs(spark, lambda: build_knn_graph(pts, k, extent=ext).toArrow())
+    assert len(jobs) <= 2, jobs
+    check(tbl)
+    pts.unpersist()
 
 
 def test_resident_index_drops_non_finite_extra_coordinate():

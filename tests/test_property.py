@@ -21,7 +21,7 @@ from rindex_spark.config import EngineConfig, GridSpec
 from rindex_spark.operators.knn import build_knn_graph, knn_for_queries
 from rindex_spark.operators.range_query import range_join
 
-from tests.conftest import brute_knn
+from tests.conftest import GRAPH_PATHS, brute_knn, graph_path
 
 
 coord = st.one_of(
@@ -41,31 +41,35 @@ _SETTINGS = settings(
 
 @given(pts=point_sets, k=st.integers(1, 12), cell=st.sampled_from([0.7, 5.0, 60.0]))
 @_SETTINGS
-def test_knn_graph_matches_bruteforce_property(spark, pts, k, cell):
+def test_knn_graph_matches_bruteforce_property(spark, monkeypatch, pts, k, cell):
     coords = np.array(pts, dtype=np.float64)
     ids = np.arange(len(coords))
     df = spark.createDataFrame(
         [(int(i), float(x), float(y)) for i, (x, y) in zip(ids, coords)],
         "id long, x double, y double",
     )
-    graph = build_knn_graph(df, k, spec=GridSpec(cell_size=cell), cfg=EngineConfig(k=max(k, 1)))
     oracle = brute_knn(coords, ids, k)
-    by_src: dict[int, list] = {}
-    for r in graph.collect():
-        by_src.setdefault(r["src"], []).append((r["dist"], r["dst"], r["rank"]))
-    assert set(by_src) == set(oracle)
-    for src, got in by_src.items():
-        got.sort(key=lambda t: t[2])
-        exp = oracle[src]
-        assert len(got) == len(exp)
-        # distance multisets must match exactly (reference contract);
-        # ids must match at unique-distance positions
-        for (gd, gid, _), (ed, eid) in zip(got, exp):
-            assert gd == ed or abs(gd - ed) < 1e-9, (src, gd, ed)
-        dists = [e[0] for e in exp]
-        for (gd, gid, _), (ed, eid) in zip(got, exp):
-            if dists.count(ed) == 1:
-                assert gid == eid, (src, ed)
+    for path in GRAPH_PATHS:
+        with graph_path(monkeypatch, path):
+            graph = build_knn_graph(
+                df, k, spec=GridSpec(cell_size=cell), cfg=EngineConfig(k=max(k, 1))
+            ).collect()
+        by_src: dict[int, list] = {}
+        for r in graph:
+            by_src.setdefault(r["src"], []).append((r["dist"], r["dst"], r["rank"]))
+        assert set(by_src) == set(oracle), path
+        for src, got in by_src.items():
+            got.sort(key=lambda t: t[2])
+            exp = oracle[src]
+            assert len(got) == len(exp)
+            # distance multisets must match exactly (reference contract);
+            # ids must match at unique-distance positions
+            for (gd, gid, _), (ed, eid) in zip(got, exp):
+                assert gd == ed or abs(gd - ed) < 1e-9, (path, src, gd, ed)
+            dists = [e[0] for e in exp]
+            for (gd, gid, _), (ed, eid) in zip(got, exp):
+                if dists.count(ed) == 1:
+                    assert gid == eid, (path, src, ed)
 
 
 @given(
